@@ -408,7 +408,9 @@ def compact_line(out: dict, limit: int = LINE_LIMIT) -> str:
     tests/test_bench_line.py). The old slowest-first drop loop remains
     solely as a backstop so even a pathological payload (hundreds of
     queries, 5-digit seconds) still yields a parseable line;
-    ``queries_in_line``/``queries_total`` record any truncation.
+    ``queries_in_line``/``queries_total`` record any truncation, and a
+    truncated line carries ``"truncated": true`` plus one stderr line
+    naming the dropped queries.
     ``scale_check`` never rides the line — it lives in the detail file."""
     base = {
         k: v
@@ -427,9 +429,22 @@ def compact_line(out: dict, limit: int = LINE_LIMIT) -> str:
         base["queries_in_line"] = len(kept)
         cand = json.dumps(base, separators=(",", ":"))
         if len(cand) >= limit:
+            # backstop: mark the line and drop the fastest kept entries
+            # until the marker fits too
+            base["truncated"] = True
             del kept[name]
             base["queries_in_line"] = len(kept)
             line = json.dumps(base, separators=(",", ":"))
+            while len(line) >= limit and kept:
+                kept.popitem()
+                base["queries_in_line"] = len(kept)
+                line = json.dumps(base, separators=(",", ":"))
+            dropped = [n for n, _ in ranked if n not in kept]
+            print(
+                f"bench: line backstop dropped {len(dropped)} queries: "
+                + ", ".join(dropped),
+                file=sys.stderr,
+            )
             break
         line = cand
     assert len(line) < limit, (len(line), limit)

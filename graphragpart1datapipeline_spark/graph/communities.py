@@ -16,9 +16,13 @@ bound:
   Leiden (local move + γ-gated refinement + aggregation on the refined
   partition; Traag et al. 2019, θ→0 greedy variant) maximizing the SAME
   RB-configuration quality function at the same resolutions (noted,
-  never silent). A vendored Louvain (no refinement) stays available as
-  ``algorithm="louvain"``. The membership comes back as a DataFrame
-  regardless, so downstream rollups stay distributed.
+  never silent). ``algorithm="louvain"`` is the same vendored loop
+  with the refinement step skipped. The membership comes back as a
+  DataFrame regardless, so downstream rollups stay distributed.
+- :func:`louvain_communities` / :func:`leiden_communities` — one
+  distributed level loop; Louvain is the Leiden loop without
+  refinement (contraction on the move partition, singleton start
+  every level), so each execution mode has exactly one loop.
 - :func:`community_rollup` — the reference's per-community Python loop
   (detect_communities.py:294-333) collapsed into ONE groupBy + window
   plan (A9): member counts, top tags/genres/countries, representative
@@ -30,6 +34,7 @@ from __future__ import annotations
 import random
 import warnings
 from collections import defaultdict
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,8 +159,8 @@ def _louvain_one_level(
     resolution knob has identical semantics (higher → finer).
     Deterministic: node order is seeded-shuffled once per sweep; tie on
     gain breaks to the smaller community id. ``init_labels`` seeds the
-    starting partition (Leiden passes the previous level's partition;
-    Louvain starts from singletons).
+    starting partition (the previous level's move partition; None is
+    the singleton start).
     """
     n = len(adj)
     if init_labels is None:
@@ -197,70 +202,6 @@ def _louvain_one_level(
         if moves == 0:
             break
     return labels, improved
-
-
-def _louvain_driver_local(
-    edge_list: list[tuple[str, str]],
-    resolution: float,
-    seed: int,
-    max_levels: int = 20,
-) -> dict[str, int]:
-    """Vendored seeded Louvain (pure Python, no igraph/leidenalg needed):
-    repeated local moving + graph aggregation maximizing RB modularity
-    at ``resolution``. Matches the reference's contract
-    (utils/neo4j_helpers.py:237-268: seeded, resolution-parameterized,
-    deterministic — determinism test test_neo4j_helpers.py:367) without
-    the native dependency. Communities renumbered by (size desc,
-    min-member) for stable ids across runs."""
-    rng = random.Random(seed)
-    nodes = sorted({n for e in edge_list for n in e})
-    idx = {n: i for i, n in enumerate(nodes)}
-    w: dict[tuple[int, int], float] = defaultdict(float)
-    for a, b in edge_list:
-        ia, ib = idx[a], idx[b]
-        w[(min(ia, ib), max(ia, ib))] += 1.0
-    mapping = list(range(len(nodes)))  # original index -> supernode
-    n = len(nodes)
-    for _ in range(max_levels):
-        if n == 0:
-            break
-        adj: list[list[tuple[int, float]]] = [[] for _ in range(n)]
-        degrees = [0.0] * n
-        m2 = 0.0
-        for (a, b), wt in w.items():
-            if a == b:  # self-loop counts twice toward degree (igraph convention)
-                adj[a].append((a, 2 * wt))
-                degrees[a] += 2 * wt
-                m2 += 2 * wt
-            else:
-                adj[a].append((b, wt))
-                adj[b].append((a, wt))
-                degrees[a] += wt
-                degrees[b] += wt
-                m2 += 2 * wt
-        if m2 == 0:
-            break
-        labels, improved = _louvain_one_level(adj, degrees, m2, resolution, rng)
-        if not improved:
-            break
-        # compress labels to dense 0..k-1 (ascending label for determinism)
-        remap = {lbl: i for i, lbl in enumerate(sorted(set(labels)))}
-        labels = [remap[lbl] for lbl in labels]
-        k = len(remap)
-        if k == n:
-            break
-        mapping = [labels[s] for s in mapping]
-        new_w: dict[tuple[int, int], float] = defaultdict(float)
-        for (a, b), wt in w.items():
-            ca, cb = labels[a], labels[b]
-            new_w[(min(ca, cb), max(ca, cb))] += wt
-        w, n = new_w, k
-    # stable renumbering by (size desc, min original member)
-    groups: dict[int, list[str]] = defaultdict(list)
-    for orig, node in enumerate(nodes):
-        groups[mapping[orig]].append(node)
-    ordered = sorted(groups.values(), key=lambda ms: (-len(ms), min(ms)))
-    return {name: i for i, ms in enumerate(ordered) for name in ms}
 
 
 def _leiden_refine(
@@ -338,6 +279,7 @@ def _leiden_driver_local_vendored(
     resolution: float,
     seed: int,
     max_levels: int = 20,
+    refine: bool = True,
 ) -> dict[str, int]:
     """Vendored pure-Python seeded Leiden: local moving (same
     RB-configuration quality as leidenalg) + γ-gated refinement +
@@ -348,7 +290,12 @@ def _leiden_driver_local_vendored(
     (size desc, min-member) for stable ids across runs. Matches the
     reference's contract (utils/neo4j_helpers.py:237-268: leidenalg
     RBConfiguration, seeded, resolution-parameterized; determinism test
-    test_neo4j_helpers.py:367)."""
+    test_neo4j_helpers.py:367).
+
+    ``refine=False`` is vendored Louvain: the level contracts on the
+    move partition itself, so the carried init is the identity on the
+    supernodes (Louvain's singleton start) and the seeded rng stream
+    is never drawn by a refinement pass."""
     rng = random.Random(seed)
     nodes = sorted({n for e in edge_list for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -386,7 +333,11 @@ def _leiden_driver_local_vendored(
         final_labels = labels
         if not improved and init is not None:
             break
-        refined = _leiden_refine(adj, degrees, m2, resolution, labels, rng)
+        refined = (
+            _leiden_refine(adj, degrees, m2, resolution, labels, rng)
+            if refine
+            else labels
+        )
         remap = {lbl: i for i, lbl in enumerate(sorted(set(refined)))}
         refined = [remap[lbl] for lbl in refined]
         k = len(remap)
@@ -431,18 +382,16 @@ def detect_communities(
     ImportError if absent), ``"leiden-vendored"`` (pure-Python seeded
     Leiden — local move + γ-gated refinement + aggregation on the
     refined partition, Traag et al. 2019, no native deps),
-    ``"louvain"`` (vendored seeded Louvain, same RB quality function,
-    no refinement), ``"louvain-distributed"`` (fully-distributed
-    :func:`louvain_communities` per resolution — NO driver-side graph,
-    no size bound; same RB gain function, deterministic monotone-
-    descent rounds; community ids densely renumbered by size desc /
-    min member), ``"leiden-distributed"`` (fully-distributed
-    :func:`leiden_communities` — louvain-distributed plus the γ-gated
-    well-connectedness refinement phase, aggregation on the refined
-    partition, move partition as next-level init: the Leiden loop with
-    no driver-side graph), or ``"auto"`` (native leiden when
-    importable, else the vendored Leiden with a one-time note — never
-    a silent swap).
+    ``"louvain"`` (the vendored Leiden loop with refinement off:
+    seeded Louvain, same RB quality function),
+    ``"leiden-distributed"`` (:func:`leiden_multiresolution` — the
+    fully-distributed Leiden loop, NO driver-side graph, no size bound;
+    community ids densely renumbered by size desc / min member),
+    ``"louvain-distributed"`` (the same sweep with refinement off:
+    :func:`louvain_communities` per resolution over one
+    canonicalization), or ``"auto"`` (native leiden when importable,
+    else the vendored Leiden with a one-time note — never a silent
+    swap).
 
     Except under the two ``*-distributed`` algorithms, the edge list
     is collected to the driver (documented size bound — the reference
@@ -454,38 +403,17 @@ def detect_communities(
     ):
         raise ValueError(f"unknown algorithm {algorithm!r}")
     if algorithm in ("louvain-distributed", "leiden-distributed"):
-        from pyspark.sql import Window as _W
-
+        # one canonicalization + one degree frame for the whole γ sweep,
+        # not one per resolution; Louvain is the sweep without refinement
         base = edges.select(
             F.col(src).cast("string").alias("src"),
             F.col(dst).cast("string").alias("dst"),
         )
-        if algorithm == "leiden-distributed":
-            # one canonicalization + one degree frame for the whole
-            # γ sweep (leiden_multiresolution), not one per resolution
-            return leiden_multiresolution(
-                base, resolutions=tuple(float(r) for r in resolutions)
-            )
-        out = None
-        for i, res in enumerate(resolutions):
-            mem = louvain_communities(base, resolution=float(res))
-            sizes = mem.groupBy("community").agg(
-                F.count(F.lit(1)).alias("__n"), F.min("id").alias("__mn")
-            )
-            # dense ids by (size desc, min member): single-task window
-            # over the COMMUNITY table only (communities << nodes)
-            ids = sizes.withColumn(
-                f"community_L{i}",
-                (
-                    F.row_number().over(
-                        _W.orderBy(F.desc("__n"), F.asc("__mn"))
-                    )
-                    - 1
-                ).cast("long"),
-            ).select("community", f"community_L{i}")
-            lvl = mem.join(ids, "community").select("id", f"community_L{i}")
-            out = lvl if out is None else out.join(lvl, "id")
-        return out
+        return _multiresolution(
+            base, "src", "dst", tuple(float(r) for r in resolutions),
+            rounds_per_level=2, levels=2, refine_rounds=2, weight_col=None,
+            refine=algorithm == "leiden-distributed",
+        )
     rows = (
         edges.select(F.col(src).cast("string"), F.col(dst).cast("string"))
         .distinct()
@@ -499,7 +427,7 @@ def detect_communities(
         )
     edge_list = [(r[0], r[1]) for r in rows]
     if algorithm == "louvain":
-        detector = _louvain_driver_local
+        detector = partial(_leiden_driver_local_vendored, refine=False)
     elif algorithm == "leiden-vendored":
         detector = _leiden_driver_local_vendored
     else:
@@ -1078,56 +1006,15 @@ def louvain_communities(
     every step a shuffle-bounded DataFrame op: labels and degrees are
     node-sized, only the edge join is edge-sized, and localCheckpoint
     per round keeps lineage flat. No driver-side graph ever exists;
-    the only collect is the 1-row 2m scalar per level.
+    the only collect is the 1-row 2m scalar per level. It runs as the
+    Leiden loop with refinement off: each level contracts on the move
+    partition and the next one restarts from singletons.
     """
-    spark = edges.sparkSession
     can = _canonical_edges(edges, src, dst, weight_col)
-    membership: DataFrame | None = None
-    for level in range(levels):
-        deg = _level_degrees(can)
-        m2_row = deg.agg(F.sum("deg")).collect()[0][0]
-        if m2_row is None or m2_row == 0:
-            break
-        m2 = float(m2_row)
-        _check_gain_precision(m2)
-        sym = (
-            can.filter(F.col("a") != F.col("b"))
-            .select(F.col("a").alias("i"), F.col("b").alias("j"), "w")
-            .unionByName(
-                can.filter(F.col("a") != F.col("b")).select(
-                    F.col("b").alias("i"), F.col("a").alias("j"), "w"
-                )
-            )
-        )
-        labels = deg.select("id", F.col("id").alias("lab"))
-        for _ in range(rounds_per_level):
-            labels = _local_move_round(labels, deg, sym, m2, resolution)
-        membership = (
-            labels
-            if membership is None
-            else membership.join(
-                labels.select(F.col("id").alias("lab"), F.col("lab").alias("__new")),
-                "lab",
-            )
-            .select("id", F.col("__new").alias("lab"))
-            .localCheckpoint(eager=False)
-        )
-        if level < levels - 1:
-            la = labels.select(F.col("id").alias("a"), F.col("lab").alias("la"))
-            lb = labels.select(F.col("id").alias("b"), F.col("lab").alias("lb"))
-            can = (
-                can.join(la, "a")
-                .join(lb, "b")
-                .groupBy(
-                    F.least("la", "lb").alias("a"),
-                    F.greatest("la", "lb").alias("b"),
-                )
-                .agg(F.sum("w").alias("w"))
-                .localCheckpoint(eager=False)
-            )
-    if membership is None:
-        return spark.createDataFrame([], "id string, community string")
-    return membership.select("id", F.col("lab").alias("community"))
+    return _leiden_from_canonical(
+        edges.sparkSession, can, resolution, rounds_per_level, levels,
+        refine_rounds=0, refine=False,
+    )
 
 
 def leiden_communities(
@@ -1188,6 +1075,145 @@ def leiden_communities(
     )
 
 
+def _refine_partition(
+    labels: DataFrame,
+    deg: DataFrame,
+    sym: DataFrame,
+    m2: float,
+    resolution: float,
+    refine_rounds: int,
+) -> DataFrame:
+    """Leiden's refinement inside each move community (see
+    :func:`leiden_communities` step 2): ``refine_rounds`` synchronous
+    merge rounds from singletons under the γ-gated node and
+    sub-community well-connectedness tests. Returns (id, rlab)."""
+    symc = (
+        sym.join(
+            labels.select(F.col("id").alias("i"), F.col("lab").alias("li")),
+            "i",
+        )
+        .join(
+            labels.select(F.col("id").alias("j"), F.col("lab").alias("lj")),
+            "j",
+        )
+        .filter(F.col("li") == F.col("lj"))
+        .select("i", "j", "w")
+        .localCheckpoint(eager=False)
+    )
+    ctot = (
+        labels.join(deg, "id")
+        .groupBy("lab")
+        .agg(F.sum("deg").alias("ctot"))
+    )
+    ev = symc.groupBy(F.col("i").alias("id")).agg(F.sum("w").alias("ev"))
+    node_wc = (
+        labels.join(deg, "id")
+        .join(ctot, "lab")
+        .join(ev, "id", "left")
+        .select(
+            "id",
+            (
+                F.lit(m2)
+                * F.coalesce(F.col("ev"), F.lit(0).cast("long")).cast("double")
+                >= F.lit(resolution)
+                * F.col("deg").cast("double")
+                * (F.col("ctot") - F.col("deg")).cast("double")
+            ).alias("wc"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    rlab = deg.select("id", F.col("id").alias("rlab"))
+    for _ in range(refine_rounds):
+        ann = symc.join(
+            rlab.select(F.col("id").alias("i"), F.col("rlab").alias("ri")),
+            "i",
+        ).join(
+            rlab.select(F.col("id").alias("j"), F.col("rlab").alias("rj")),
+            "j",
+        )
+        rtot = rlab.join(deg, "id").groupBy("rlab").agg(
+            F.sum("deg").alias("rtot"), F.count(F.lit(1)).alias("rsize")
+        )
+        rext = (
+            ann.filter(F.col("ri") != F.col("rj"))
+            .groupBy(F.col("ri").alias("rlab"))
+            .agg(F.sum("w").alias("rext"))
+        )
+        rparent = rlab.join(labels, "id").groupBy("rlab").agg(
+            F.min("lab").alias("lab")
+        )
+        sub = (
+            rtot.join(rparent, "rlab")
+            .join(ctot, "lab")
+            .join(rext, "rlab", "left")
+            .select(
+                "rlab",
+                "rtot",
+                (
+                    F.lit(m2)
+                    * F.coalesce(F.col("rext"), F.lit(0).cast("long")).cast(
+                        "double"
+                    )
+                    >= F.lit(resolution)
+                    * F.col("rtot").cast("double")
+                    * (F.col("ctot") - F.col("rtot")).cast("double")
+                ).alias("swc"),
+            )
+        )
+        kir = (
+            ann.filter(F.col("ri") != F.col("rj"))
+            .groupBy(F.col("i").alias("id"), F.col("rj").alias("tr"))
+            .agg(F.sum("w").alias("kir"))
+        )
+        from pyspark.sql import Window as _W
+
+        pick = (
+            rlab.join(
+                rtot.select("rlab", "rsize").filter(F.col("rsize") == 1),
+                "rlab",
+            )
+            .join(node_wc.filter(F.col("wc")), "id")
+            .join(deg, "id")
+            .join(kir, "id")
+            .join(
+                sub.select(
+                    F.col("rlab").alias("tr"),
+                    F.col("rtot").alias("ttot"),
+                    "swc",
+                ),
+                "tr",
+            )
+            .filter(F.col("swc") & (F.col("tr") < F.col("rlab")))
+            .withColumn(
+                "gain",
+                F.lit(m2) * F.col("kir").cast("double")
+                - F.lit(resolution)
+                * F.col("deg").cast("double")
+                * F.col("ttot").cast("double"),
+            )
+            .filter(F.col("gain") > 0)
+            .withColumn(
+                "rn",
+                F.row_number().over(
+                    _W.partitionBy("id").orderBy(
+                        F.col("gain").desc(), F.col("tr").asc()
+                    )
+                ),
+            )
+            .filter(F.col("rn") == 1)
+            .select("id", F.col("tr").alias("new_rlab"))
+        )
+        rlab = (
+            rlab.join(pick, "id", "left")
+            .select(
+                "id",
+                F.coalesce("new_rlab", "rlab").alias("rlab"),
+            )
+            .localCheckpoint(eager=False)
+        )
+    return rlab
+
+
 def _leiden_from_canonical(
     spark: SparkSession,
     can: DataFrame,
@@ -1196,12 +1222,18 @@ def _leiden_from_canonical(
     levels: int,
     refine_rounds: int,
     deg0: DataFrame | None = None,
+    refine: bool = True,
 ) -> DataFrame:
     """The Leiden loop on an ALREADY-CANONICAL edge frame — split out
     so :func:`leiden_multiresolution` can run several γ values over ONE
     canonicalization (and one shared level-0 degree frame via ``deg0``;
     both are γ-independent). Everything from the first local-move round
-    on diverges per γ, so per-level frames stay private."""
+    on diverges per γ, so per-level frames stay private.
+
+    ``refine=False`` is :func:`louvain_communities`: no refinement and
+    no stranded-singleton rescue, contraction on the move partition,
+    and every level starts from singletons (the carried init would be
+    the identity on the supernodes anyway)."""
     node_map: DataFrame | None = None  # original id -> current-level node
     init: DataFrame | None = None  # next level's initial (id, lab)
     last_labels: DataFrame | None = None
@@ -1231,136 +1263,16 @@ def _leiden_from_canonical(
         )
         for _ in range(rounds_per_level):
             labels = _local_move_round(
-                labels, deg, sym, m2, resolution, rescue_stranded=True
+                labels, deg, sym, m2, resolution, rescue_stranded=refine
             )
         last_labels = labels
         if level >= levels - 1:
             break
-        # ---- refinement inside each move community -------------------
-        symc = (
-            sym.join(
-                labels.select(F.col("id").alias("i"), F.col("lab").alias("li")),
-                "i",
-            )
-            .join(
-                labels.select(F.col("id").alias("j"), F.col("lab").alias("lj")),
-                "j",
-            )
-            .filter(F.col("li") == F.col("lj"))
-            .select("i", "j", "w")
-            .localCheckpoint(eager=False)
+        rlab = (
+            _refine_partition(labels, deg, sym, m2, resolution, refine_rounds)
+            if refine
+            else labels.withColumnRenamed("lab", "rlab")
         )
-        ctot = (
-            labels.join(deg, "id")
-            .groupBy("lab")
-            .agg(F.sum("deg").alias("ctot"))
-        )
-        ev = symc.groupBy(F.col("i").alias("id")).agg(F.sum("w").alias("ev"))
-        node_wc = (
-            labels.join(deg, "id")
-            .join(ctot, "lab")
-            .join(ev, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(m2)
-                    * F.coalesce(F.col("ev"), F.lit(0).cast("long")).cast("double")
-                    >= F.lit(resolution)
-                    * F.col("deg").cast("double")
-                    * (F.col("ctot") - F.col("deg")).cast("double")
-                ).alias("wc"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        rlab = deg.select("id", F.col("id").alias("rlab"))
-        for _ in range(refine_rounds):
-            ann = symc.join(
-                rlab.select(F.col("id").alias("i"), F.col("rlab").alias("ri")),
-                "i",
-            ).join(
-                rlab.select(F.col("id").alias("j"), F.col("rlab").alias("rj")),
-                "j",
-            )
-            rtot = rlab.join(deg, "id").groupBy("rlab").agg(
-                F.sum("deg").alias("rtot"), F.count(F.lit(1)).alias("rsize")
-            )
-            rext = (
-                ann.filter(F.col("ri") != F.col("rj"))
-                .groupBy(F.col("ri").alias("rlab"))
-                .agg(F.sum("w").alias("rext"))
-            )
-            rparent = rlab.join(labels, "id").groupBy("rlab").agg(
-                F.min("lab").alias("lab")
-            )
-            sub = (
-                rtot.join(rparent, "rlab")
-                .join(ctot, "lab")
-                .join(rext, "rlab", "left")
-                .select(
-                    "rlab",
-                    "rtot",
-                    (
-                        F.lit(m2)
-                        * F.coalesce(F.col("rext"), F.lit(0).cast("long")).cast(
-                            "double"
-                        )
-                        >= F.lit(resolution)
-                        * F.col("rtot").cast("double")
-                        * (F.col("ctot") - F.col("rtot")).cast("double")
-                    ).alias("swc"),
-                )
-            )
-            kir = (
-                ann.filter(F.col("ri") != F.col("rj"))
-                .groupBy(F.col("i").alias("id"), F.col("rj").alias("tr"))
-                .agg(F.sum("w").alias("kir"))
-            )
-            from pyspark.sql import Window as _W
-
-            pick = (
-                rlab.join(
-                    rtot.select("rlab", "rsize").filter(F.col("rsize") == 1),
-                    "rlab",
-                )
-                .join(node_wc.filter(F.col("wc")), "id")
-                .join(deg, "id")
-                .join(kir, "id")
-                .join(
-                    sub.select(
-                        F.col("rlab").alias("tr"),
-                        F.col("rtot").alias("ttot"),
-                        "swc",
-                    ),
-                    "tr",
-                )
-                .filter(F.col("swc") & (F.col("tr") < F.col("rlab")))
-                .withColumn(
-                    "gain",
-                    F.lit(m2) * F.col("kir").cast("double")
-                    - F.lit(resolution)
-                    * F.col("deg").cast("double")
-                    * F.col("ttot").cast("double"),
-                )
-                .filter(F.col("gain") > 0)
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        _W.partitionBy("id").orderBy(
-                            F.col("gain").desc(), F.col("tr").asc()
-                        )
-                    ),
-                )
-                .filter(F.col("rn") == 1)
-                .select("id", F.col("tr").alias("new_rlab"))
-            )
-            rlab = (
-                rlab.join(pick, "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("new_rlab", "rlab").alias("rlab"),
-                )
-                .localCheckpoint(eager=False)
-            )
         # ---- contraction on the refined partition --------------------
         node_map = (
             rlab
@@ -1375,11 +1287,15 @@ def _leiden_from_canonical(
             .select("id", F.col("__new").alias("rlab"))
             .localCheckpoint(eager=False)
         )
+        # the move partition seeds the next level; without refinement
+        # that is the identity on the supernodes, i.e. singletons
         init = (
             rlab.join(labels, "id")
             .select(F.col("rlab").alias("id"), "lab")
             .distinct()
             .localCheckpoint(eager=False)
+            if refine
+            else None
         )
         ra = rlab.select(F.col("id").alias("a"), F.col("rlab").alias("la"))
         rb = rlab.select(F.col("id").alias("b"), F.col("rlab").alias("lb"))
@@ -1433,6 +1349,26 @@ def leiden_multiresolution(
     — so the sweep costs one canonicalization + Σγ(iteration rounds),
     not 3× everything. The dense-renumber window runs over the
     COMMUNITY table only (communities << nodes)."""
+    return _multiresolution(
+        edges, src, dst, resolutions, rounds_per_level, levels,
+        refine_rounds, weight_col, refine=True,
+    )
+
+
+def _multiresolution(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    resolutions: tuple[float, ...],
+    rounds_per_level: int,
+    levels: int,
+    refine_rounds: int,
+    weight_col: str | None,
+    refine: bool,
+) -> DataFrame:
+    """The γ sweep behind :func:`leiden_multiresolution`; with
+    ``refine=False`` it is the distributed Louvain sweep of
+    ``detect_communities(algorithm="louvain-distributed")``."""
     from pyspark.sql import Window as _W
 
     spark = edges.sparkSession
@@ -1442,7 +1378,7 @@ def leiden_multiresolution(
     for i, res in enumerate(resolutions):
         mem = _leiden_from_canonical(
             spark, can, float(res), rounds_per_level, levels,
-            refine_rounds, deg0=deg0,
+            refine_rounds, deg0=deg0, refine=refine,
         )
         sizes = mem.groupBy("community").agg(
             F.count(F.lit(1)).alias("__n"), F.min("id").alias("__mn")
@@ -1457,7 +1393,7 @@ def leiden_multiresolution(
         lvl = mem.join(ids, "community").select("id", f"community_L{i}")
         out = lvl if out is None else out.join(lvl, "id")
     if out is None:
-        raise ValueError("leiden_multiresolution needs >= 1 resolution")
+        raise ValueError("a multi-resolution sweep needs >= 1 resolution")
     return out
 
 

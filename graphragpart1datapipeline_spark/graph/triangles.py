@@ -215,19 +215,6 @@ def _triangle_counts_adjacency(
     return credits.groupBy("node").agg(F.sum("n").alias("triangles"))
 
 
-def triangle_total(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Single-row total triangle count of the graph."""
-    e = _canonical(edges, src, dst)
-    w1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    w2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    closing = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    return (
-        w1.join(w2, "y")
-        .join(closing, ["x", "z"])
-        .agg(F.count(F.lit(1)).alias("triangles"))
-    )
-
-
 def ktruss_edges(
     edges: DataFrame,
     k: int,

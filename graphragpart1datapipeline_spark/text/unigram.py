@@ -190,12 +190,13 @@ def _viterbi_hops(
     edges = cand.join(
         F.broadcast(pieces.select("piece", "ll")), "piece"
     ).select("w", "j", "i", "ll").localCheckpoint(eager=False)
-    # DP by position. Each settled layer is eagerly checkpointed: a
-    # layer feeds BOTH later layers' joins and the final union, and
-    # un-checkpointed that double reference re-expands the lineage
-    # per step — the exponential-plan trap every iterative op in this
-    # repo avoids the same way (graph/communities.py round rule).
-    # Layers are vocab-sized; the jobs are trivial.
+    # DP by position. Each settled layer is checkpointed (lazily: it
+    # materializes on the first job that reads it): a layer feeds BOTH
+    # later layers' joins and the final union, and un-checkpointed that
+    # double reference re-expands the lineage per step — the
+    # exponential-plan trap every iterative op in this repo avoids the
+    # same way (graph/communities.py round rule). Layers are
+    # vocab-sized; the jobs are trivial.
     layer0 = words.select(
         "w", F.lit(0).cast("long").alias("i"),
         F.lit(0).cast("long").alias("best"),

@@ -23,6 +23,7 @@ from collections.abc import Iterator, Sequence
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
 class IvfDriftError(ValueError):
@@ -268,12 +269,22 @@ def ivf_assignments(
     already hold driver-side centroids (kmeans' Lloyd loop) use the
     literal form directly. At 100 TB the (id, centroid_id) output is
     persisted and the corpus is repartitioned/bucketed BY centroid_id
-    so a probe reads only its clusters. Returns (id_col, centroid_id)."""
+    so a probe reads only its clusters. Returns (id_col, centroid_id).
+
+    The centroid id must be an integral type: the (−cid) tie-break key
+    would turn any other id (a string, say) into a NULL centroid_id, so
+    such a frame raises TypeError instead."""
     v = df.select(F.col(id_col), F.col(vec_col).alias("__v"))
     c = centroids.select(
         F.col(cent_id_col).alias("__cid"), F.col(cent_vec_col).alias("__cv")
     )
-    cid_type = c.schema["__cid"].dataType.simpleString()
+    cid_dtype = c.schema["__cid"].dataType
+    if not isinstance(cid_dtype, IntegralType):
+        raise TypeError(
+            f"ivf_assignments: centroid id column {cent_id_col!r} must be "
+            f"an integral type, got {cid_dtype.simpleString()}"
+        )
+    cid_type = cid_dtype.simpleString()
     scored = v.join(F.broadcast(c)).select(
         id_col,
         "__cid",

@@ -88,6 +88,38 @@ def test_pathological_many_long_names_under_limit():
     assert json.loads(line)["queries_total"] == 400
 
 
+def test_backstop_drop_is_marked_and_reported(capsys):
+    """A payload that overflows the line sets ``truncated`` and names
+    every dropped query on stderr; a line that fits is unchanged
+    (no marker, no stderr, byte-identical to the plain serialization)."""
+    names = [f"q{i:04d}_extremely_long_operator_family_name_{i}" for i in range(400)]
+    out = _fake_out(names)
+    out["queries"] = {n: 99999.999 for n in names}
+    line = bench.compact_line(out)
+    assert len(line) < bench.LINE_LIMIT
+    parsed = json.loads(line)
+    assert parsed["truncated"] is True
+    assert parsed["queries_in_line"] == len(parsed["queries"]) < 400
+    err = capsys.readouterr().err.strip().splitlines()
+    assert len(err) == 1
+    dropped = [n for n in names if n not in parsed["queries"]]
+    assert err[0].startswith(f"bench: line backstop dropped {len(dropped)} queries: ")
+    assert err[0].endswith(", ".join(dropped))
+
+    out = _fake_out(list(bench.HEADLINE))
+    line = bench.compact_line(out)
+    assert "truncated" not in json.loads(line)
+    assert capsys.readouterr().err == ""
+    ranked = sorted(out["queries"].items(), key=lambda kv: (-kv[1], kv[0]))
+    plain = {
+        k: v for k, v in out.items() if k not in ("queries", "scale_check", "load")
+    }
+    plain["queries_total"] = len(ranked)
+    plain["queries"] = {n: round(t, 2) for n, t in ranked}
+    plain["queries_in_line"] = len(ranked)
+    assert line == json.dumps(plain, separators=(",", ":"))
+
+
 def test_keeps_slowest_queries_in_line():
     names = [f"q{i:03d}_op" for i in range(200)]
     out = _fake_out(names)

@@ -322,8 +322,12 @@ def test_louvain_resolution_semantics():
     import itertools
 
     from graphragpart1datapipeline_spark.graph.communities import (
-        _louvain_driver_local,
+        _leiden_driver_local_vendored,
     )
+
+    def louvain(edges, res, seed):
+        # vendored Louvain = the Leiden loop with refinement off
+        return _leiden_driver_local_vendored(edges, res, seed, refine=False)
 
     # ring of 10 six-cliques: high resolution -> one community per clique,
     # very low resolution -> cliques merge (reference invariant: finer at
@@ -333,15 +337,15 @@ def test_louvain_resolution_semantics():
         ns = [f"c{c}n{i}" for i in range(6)]
         edges += list(itertools.combinations(ns, 2))
         edges.append((f"c{c}n0", f"c{(c + 1) % 10}n0"))
-    fine = _louvain_driver_local(edges, 2.0, 42)
-    coarse = _louvain_driver_local(edges, 0.05, 42)
+    fine = louvain(edges, 2.0, 42)
+    coarse = louvain(edges, 0.05, 42)
     assert len(set(fine.values())) == 10
     assert len(set(coarse.values())) < 10
     # members of one clique always land together at fine resolution
     for c in range(10):
         assert len({fine[f"c{c}n{i}"] for i in range(6)}) == 1
     # seeded determinism (reference test_neo4j_helpers.py:367)
-    assert fine == _louvain_driver_local(edges, 2.0, 42)
+    assert fine == louvain(edges, 2.0, 42)
 
 
 def test_leiden_vendored_semantics():

@@ -484,44 +484,53 @@ def test_leiden_multiresolution_single_canonicalization(spark):
     """The γ sweep must canonicalize the edges and build the level-0
     degree frame exactly ONCE (they are γ-independent) — three
     resolutions may not cost three input-sized distinct+checkpoint
-    passes (round-4 verdict task 4)."""
+    passes (round-4 verdict task 4). The distributed Louvain sweep is
+    the same sweep with refinement off, so it shares the bound."""
     from graphragpart1datapipeline_spark.graph import communities as C
 
-    calls = {"canon": 0, "deg": 0}
     orig_canon, orig_deg = C._canonical_edges, C._level_degrees
-
-    def canon(*a, **k):
-        calls["canon"] += 1
-        return orig_canon(*a, **k)
-
-    def deg(*a, **k):
-        calls["deg"] += 1
-        return orig_deg(*a, **k)
-
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("d", "e"), ("e", "f"),
          ("f", "d"), ("c", "d")],
         "src string, dst string",
     )
-    C._canonical_edges, C._level_degrees = canon, deg
-    try:
-        out = C.leiden_multiresolution(
+    sweeps = {
+        "leiden_multiresolution": lambda: C.leiden_multiresolution(
             edges, resolutions=(2.0, 0.5, 0.1), levels=2
-        )
-        rows = out.collect()
-    finally:
-        C._canonical_edges, C._level_degrees = orig_canon, orig_deg
-    assert calls["canon"] == 1
-    # level-0 deg shared; each γ still builds its own level-1 deg
-    # (contraction graphs are γ-specific): 1 shared + 3 level-1 = 4
-    assert calls["deg"] == 4
-    assert set(out.columns) == {
-        "id", "community_L0", "community_L1", "community_L2"
+        ),
+        "louvain-distributed": lambda: C.detect_communities(
+            spark, edges, resolutions=(2.0, 0.5, 0.1),
+            algorithm="louvain-distributed",
+        ),
     }
-    assert len(rows) == 6
-    # dense renumbering starts at 0 per level
-    for lvl in ("community_L0", "community_L1", "community_L2"):
-        assert min(r[lvl] for r in rows) == 0
+    for case, sweep in sweeps.items():
+        calls = {"canon": 0, "deg": 0}
+
+        def canon(*a, **k):
+            calls["canon"] += 1
+            return orig_canon(*a, **k)
+
+        def deg(*a, **k):
+            calls["deg"] += 1
+            return orig_deg(*a, **k)
+
+        C._canonical_edges, C._level_degrees = canon, deg
+        try:
+            out = sweep()
+            rows = out.collect()
+        finally:
+            C._canonical_edges, C._level_degrees = orig_canon, orig_deg
+        assert calls["canon"] == 1, case
+        # level-0 deg shared; each γ still builds its own level-1 deg
+        # (contraction graphs are γ-specific): 1 shared + 3 level-1 = 4
+        assert calls["deg"] == 4, case
+        assert set(out.columns) == {
+            "id", "community_L0", "community_L1", "community_L2"
+        }
+        assert len(rows) == 6
+        # dense renumbering starts at 0 per level
+        for lvl in ("community_L0", "community_L1", "community_L2"):
+            assert min(r[lvl] for r in rows) == 0
 
 
 def test_embedding_incremental_no_cartesian(spark):

@@ -282,6 +282,24 @@ def test_ivf_topk_probes_own_cluster(spark):
     assert out[0]["vec_id"] == 3
 
 
+def test_ivf_assignments_rejects_non_integral_centroid_id(spark):
+    """A string centroid id would become a NULL centroid_id through the
+    negated tie-break key; it must fail loudly instead."""
+    import pytest
+
+    from graphragpart1datapipeline_spark.vector.search import ivf_assignments
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    cents = spark.createDataFrame(
+        [("c0", [1.0, 0.0]), ("c1", [0.0, 1.0])],
+        "cid string, embedding array<float>",
+    )
+    with pytest.raises(TypeError, match="integral"):
+        ivf_assignments(df, cents)
+
+
 def test_ivf_prebuilt_index_probe(spark, tmp_path):
     from graphragpart1datapipeline_spark.vector.search import (
         ivf_build_index,
