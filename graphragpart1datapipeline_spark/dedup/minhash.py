@@ -267,12 +267,15 @@ def minhash_lsh_incremental(
         )
         .distinct()
     )
-    from .ngram import ngram_jaccard_on_pairs
-
-    docs = new_df.select(id_col, text_col)
-    if corpus_df is not None:
-        docs = docs.unionByName(corpus_df.select(id_col, text_col))
-    verified = ngram_jaccard_on_pairs(cand, docs, text_col, id_col, shingle_n)
+    # each side reads its own table (a new id also in corpus_df is
+    # scored with its NEW text only) and the pairs are read once
+    texts_b = new_df if corpus_df is None else corpus_df
+    j = cand.join(new_df.select(F.col(id_col).alias("a"), F.col(text_col).alias("ta")), "a")
+    j = j.join(texts_b.select(F.col(id_col).alias("b"), F.col(text_col).alias("tb")), "b")
+    sh_a, sh_b = shingles("ta", shingle_n), shingles("tb", shingle_n)
+    union = F.size(F.array_union(sh_a, sh_b)).cast("double")
+    jac = F.size(F.array_intersect(sh_a, sh_b)).cast("double") / union
+    verified = j.select("a", "b", F.when(union > 0, jac).otherwise(0.0).alias("jaccard"))
     if jaccard_threshold is not None:
         verified = verified.filter(F.col("jaccard") >= jaccard_threshold)
     return verified.select(

@@ -10,18 +10,22 @@ State layout (all versioned parquet, crash-safe like streaming/cdc):
     root/lsh/v{N}    (doc_id, band, bucket) LSH index of LIVE docs
     root/emb/v{N}    (doc_id, embedding) hash-embedding store of LIVE docs
 
-The maintained invariant — checked by test_incremental_demo — is
-REBUILD EQUIVALENCE: after applying a change feed in ANY batch split,
-every index equals what a from-scratch rebuild over the final live
-state produces. That holds by induction because each increment replaces
-exactly the touched keys' index rows:
+The maintained invariant — checked by
+test_incremental_corpus_rebuild_equivalence — is REBUILD EQUIVALENCE:
+after applying a change feed in ANY batch split, every index equals
+what a from-scratch rebuild over the final live state produces. That
+holds by induction because each increment replaces exactly the touched
+keys' index rows:
 
     new_index = old_index ⟨anti-join touched⟩ ∪ derive(touched ∧ alive)
 
 and the CDC merge itself is out-of-order-safe (per-key applied seq +
-tombstones). Per increment the work is: one change-feed window, one
-key anti-join per index, and derivation over the TOUCHED rows only —
-the corpus is never re-read, re-hashed, or re-embedded.
+tombstones). Per increment the merge (one change-feed window + one key
+full-outer join) runs ONCE, in the state write; the index refresh
+reads the touched live rows back from that committed version, then
+does one key anti-join per index and derivation over the TOUCHED rows
+only. ``live_after`` is observed on the state write; ``changes`` and
+``touched_keys`` are one aggregate over the batch.
 
 Near-dup flags against the standing index come from
 ``minhash_lsh_incremental(corpus_buckets=...)`` — advisory per-batch
@@ -33,7 +37,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..dedup.minhash import (
@@ -50,19 +54,22 @@ BANDS = 4
 EMB_DIM = 16
 
 
-def _read_latest(spark: SparkSession, d: str) -> DataFrame:
-    v = _latest_version(d)
+def _read_latest(spark: SparkSession, d: str) -> tuple[DataFrame, int]:
+    """(newest committed version of ``d``, its number), via the session FS."""
+    v = _latest_version(d, spark)
     if v < 0:
         raise FileNotFoundError(d)
-    return spark.read.parquet(os.path.join(d, f"v{v}"))
+    return spark.read.parquet(os.path.join(d, f"v{v}")), v
 
 
-def _write_next(df: DataFrame, d: str) -> None:
+def _write_next(df: DataFrame, d: str, v: int) -> str:
+    """Write (over any uncommitted leftover) and commit ``d/v{v}``."""
     from ..streaming.cdc import _mark_committed
 
-    vdir = os.path.join(d, f"v{_latest_version(d) + 1}")
+    vdir = os.path.join(d, f"v{v}")
     df.write.mode("overwrite").parquet(vdir)
     _mark_committed(df.sparkSession, vdir)
+    return vdir
 
 
 def _lsh_rows(docs: DataFrame) -> DataFrame:
@@ -84,8 +91,8 @@ def init_corpus_state(
     """One-time build: seed the CDC state and derive both indexes from
     the initial live corpus. ``docs`` = (doc_id, text)."""
     init_cdc_state(docs.select("doc_id", "text"), os.path.join(root, "docs"))
-    _write_next(_lsh_rows(docs), os.path.join(root, "lsh"))
-    _write_next(_emb_rows(docs), os.path.join(root, "emb"))
+    _write_next(_lsh_rows(docs), os.path.join(root, "lsh"), 0)
+    _write_next(_emb_rows(docs), os.path.join(root, "emb"), 0)
 
 
 def apply_increment(
@@ -102,44 +109,47 @@ def apply_increment(
     lsh_dir = os.path.join(root, "lsh")
     emb_dir = os.path.join(root, "emb")
 
-    state = _read_latest(spark, docs_dir)
-    old_lsh = _read_latest(spark, lsh_dir)
-    old_emb = _read_latest(spark, emb_dir)
+    state, sv = _read_latest(spark, docs_dir)
+    old_lsh, lv = _read_latest(spark, lsh_dir)
+    old_emb, ev = _read_latest(spark, emb_dir)
+    touched = changes.select("doc_id").distinct()
 
     # advisory: which incoming upserts near-duplicate the standing
     # corpus (index rows of keys being replaced excluded — a doc must
     # not match its own previous revision)
     incoming = changes.filter(F.col("op") != "D").select("doc_id", "text")
-    standing = old_lsh.join(
-        changes.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
     flags = minhash_lsh_incremental(
         incoming,
         corpus_df=cdc_live(state).select("doc_id", "text"),
-        corpus_buckets=standing,
+        corpus_buckets=old_lsh.join(touched, "doc_id", "left_anti"),
         num_hashes=NUM_HASHES,
         bands=BANDS,
         jaccard_threshold=jaccard_threshold,
     )
 
     new_state = cdc_upsert_state(state, changes, ["doc_id"], "seq")
-    _write_next(new_state, docs_dir)
-
-    touched = changes.select("doc_id").distinct()
-    live_touched = cdc_live(new_state).join(touched, "doc_id", "left_semi")
+    live = Observation()
+    n_live = F.count_if(~F.coalesce(F.col("__cdc_deleted"), F.lit(False)))
+    vdir = _write_next(new_state.observe(live, n_live.alias("n")), docs_dir, sv + 1)
+    committed = spark.read.schema(new_state.schema).parquet(vdir)
+    live_touched = cdc_live(committed).join(touched, "doc_id", "left_semi")
     new_lsh = old_lsh.join(touched, "doc_id", "left_anti").unionByName(
         _lsh_rows(live_touched)
     )
-    _write_next(new_lsh, lsh_dir)
+    _write_next(new_lsh, lsh_dir, lv + 1)
     new_emb = old_emb.join(touched, "doc_id", "left_anti").unionByName(
         _emb_rows(live_touched)
     )
-    _write_next(new_emb, emb_dir)
+    _write_next(new_emb, emb_dir, ev + 1)
 
+    # a struct is never NULL: a NULL key counts once, as in distinct()
+    n_changes, n_touched = changes.agg(
+        F.count(F.lit(1)), F.count_distinct(F.struct("doc_id"))
+    ).first()
     return {
-        "changes": changes.count(),
-        "touched_keys": touched.count(),
-        "live_after": cdc_live(new_state).count(),
+        "changes": n_changes,
+        "touched_keys": n_touched,
+        "live_after": live.get["n"],
         "near_dup_flags": flags.count(),
     }
 
@@ -147,12 +157,12 @@ def apply_increment(
 def rebuild_indexes(spark: SparkSession, root: str) -> dict[str, DataFrame]:
     """From-scratch derivation over the current live state — the
     equivalence target the incremental path must match."""
-    live = cdc_live(_read_latest(spark, os.path.join(root, "docs")))
+    live = cdc_live(_read_latest(spark, os.path.join(root, "docs"))[0])
     return {"lsh": _lsh_rows(live), "emb": _emb_rows(live)}
 
 
 def read_indexes(spark: SparkSession, root: str) -> dict[str, DataFrame]:
     return {
-        "lsh": _read_latest(spark, os.path.join(root, "lsh")),
-        "emb": _read_latest(spark, os.path.join(root, "emb")),
+        "lsh": _read_latest(spark, os.path.join(root, "lsh"))[0],
+        "emb": _read_latest(spark, os.path.join(root, "emb"))[0],
     }

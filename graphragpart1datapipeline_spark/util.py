@@ -12,7 +12,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     (hashing, shingling, chunking) onto one core; the repartition
     shuffle of a small table is orders of magnitude cheaper than that.
     At scale inputs already have plenty of partitions and this is a
-    no-op (no shuffle added)."""
+    no-op (no shuffle added). The partition probe is not free when
+    ``df`` holds a shuffle: under AQE ``df.rdd.getNumPartitions()``
+    runs its shuffle stages (0 jobs on a plain scan, 2 on a scan
+    semi-joined to a ``distinct()``), which the caller's action then
+    runs again."""
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

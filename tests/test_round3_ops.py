@@ -647,6 +647,126 @@ def test_incremental_corpus_flags_near_dups(spark, tmp_path):
     )
     assert out["near_dup_flags"] >= 1
     assert out["live_after"] == 2
+    # a revision that still near-dups a standing doc is ONE flag: the
+    # pair is scored with the revision's new text, never its old one
+    s = " ".join(f"w{i}" for i in range(20))
+    root = str(tmp_path / "rev")
+    init_corpus_state(
+        spark,
+        root,
+        spark.createDataFrame([(1, s), (2, s + " ok")], "doc_id long, text string"),
+    )
+    out = apply_increment(
+        spark, root, _inc_changes(spark, [(1, s + " again", 1, "U")])
+    )
+    assert out["near_dup_flags"] == 1
+    assert (out["changes"], out["touched_keys"], out["live_after"]) == (1, 1, 2)
+
+
+def _parquet_frame(spark, path, cols):
+    """A one-file parquet table (written without a Spark job): the
+    one-partition scan that batches arrive as, so ensure_parallelism
+    repartitions it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+    return spark.read.parquet(str(path))
+
+
+def test_incremental_corpus_evaluates_merge_once(spark, tmp_path, monkeypatch):
+    """The CDC merge runs once per increment: both index refreshes
+    derive from the committed state read back, so neither plan holds
+    the merge's Window or full-outer join. Verification reads the
+    candidate pairs once, so the batch's round-robin exchange
+    (ensure_parallelism) appears once in the final plan."""
+    import pytest
+
+    from graphragpart1datapipeline_spark.dedup import minhash_lsh_incremental
+    from graphragpart1datapipeline_spark.plans import incremental_demo as inc
+
+    s = " ".join(f"w{i}" for i in range(20))
+    docs = _parquet_frame(
+        spark,
+        tmp_path / "docs.parquet",
+        {"doc_id": [1, 2], "text": [s, "an unrelated document about something else"]},
+    )
+    root = str(tmp_path / "c")
+    inc.init_corpus_state(spark, root, docs)
+    plans = {}
+    write_next = inc._write_next
+
+    class Captured(Exception):
+        pass
+
+    def spy(df, d, v):
+        # only the state write is needed (the refresh reads it back);
+        # stop once the last frame is captured
+        name = os.path.basename(d)
+        plans[name] = df._jdf.queryExecution().optimizedPlan().toString()
+        if name == "emb":
+            raise Captured
+        return write_next(df, d, v) if name == "docs" else None
+
+    monkeypatch.setattr(inc, "_write_next", spy)
+    changes = _parquet_frame(
+        spark,
+        tmp_path / "changes.parquet",
+        {"doc_id": [1, 2], "text": [s + " again", None], "seq": [1, 2], "op": ["U", "D"]},
+    )
+    with pytest.raises(Captured):
+        inc.apply_increment(spark, root, changes)
+    assert "Window" in plans["docs"] and "FullOuter" in plans["docs"]
+    for k in ("lsh", "emb"):
+        assert "Window" not in plans[k] and "FullOuter" not in plans[k], k
+
+    batch = _parquet_frame(
+        spark,
+        tmp_path / "batch.parquet",
+        {"doc_id": [10, 11], "text": [s + " again", "completely novel content here ok"]},
+    )
+    flags = minhash_lsh_incremental(
+        batch, docs, corpus_buckets=spark.read.parquet(os.path.join(root, "lsh", "v0"))
+    )
+    assert [(r["new_id"], r["corpus_id"]) for r in flags.collect()] == [(10, 1)]
+    plan = flags._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("RoundRobinPartitioning") == 1
+
+
+def test_incremental_corpus_resolves_versions_through_fs(spark, tmp_path):
+    """Versions resolve through the session's FileSystem (a ``file:``
+    URI root works), an uncommitted ``v{N+1}`` crash leftover is
+    skipped by the read, and the next write replaces it and commits."""
+    from graphragpart1datapipeline_spark.plans import incremental_demo as inc
+
+    root = "file://" + str(tmp_path / "c")
+    docs_dir = os.path.join(root, "docs")
+    inc.init_corpus_state(
+        spark,
+        root,
+        _parquet_frame(
+            spark,
+            tmp_path / "docs.parquet",
+            {"doc_id": [1, 2], "text": ["alpha beta gamma delta", "one two three four"]},
+        ),
+    )
+    leftover = tmp_path / "c" / "docs" / "v1"
+    leftover.mkdir()
+    _parquet_frame(spark, leftover / "part-0.parquet", {"doc_id": [99], "junk": ["x"]})
+    state, v = inc._read_latest(spark, docs_dir)
+    assert v == 0 and sorted(r["doc_id"] for r in state.collect()) == [1, 2]
+
+    changes = _parquet_frame(
+        spark,
+        tmp_path / "changes.parquet",
+        {"doc_id": [3], "text": ["red green blue yellow"], "seq": [1], "op": ["U"]},
+    )
+    assert inc.apply_increment(spark, root, changes)["live_after"] == 3
+    assert (leftover / "_COMMITTED").exists()
+    state, v = inc._read_latest(spark, docs_dir)
+    assert v == 1 and "junk" not in state.columns
+    assert sorted(r["doc_id"] for r in state.collect()) == [1, 2, 3]
 
 
 def test_ktruss_until_fixed_point(spark):

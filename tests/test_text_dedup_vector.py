@@ -637,6 +637,19 @@ def test_minhash_lsh_incremental(spark):
     assert got_idx == got
     # never flags new-vs-new (10 and 12 are not corpus ids)
     assert all(c in {1, 2, 3} for _, c in got)
+    # a new id that also exists in the corpus (a revision) is scored
+    # with its new text only: one row per (new_id, corpus_id)
+    rev = new.unionByName(
+        spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog tonight again")],
+            "doc_id long, text string",
+        )
+    )
+    pairs = [
+        (r["new_id"], r["corpus_id"])
+        for r in minhash_lsh_incremental(rev, corpus, jaccard_threshold=0.5).collect()
+    ]
+    assert len(pairs) == len(set(pairs)) and (1, 1) in pairs
 
 
 def test_quantize_embeddings(spark):
