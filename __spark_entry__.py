@@ -54,6 +54,7 @@ from graphragpart1datapipeline_spark.text import (
     token_count,
 )
 from graphragpart1datapipeline_spark.text.chunking import recursive_split_chunks
+from graphragpart1datapipeline_spark.util import local_frame
 from graphragpart1datapipeline_spark.vector import cosine_topk, hash_embed, lsh_topk
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -5526,8 +5527,8 @@ def q102(spark, sf_dir):
         interval_lookup_join,
     )
 
-    bands = spark.createDataFrame(
-        [
+    bands = local_frame(
+        spark, [
             ("ALL", 0.0, 1_000_000_000.0),
             ("LOW", 0.0, 100_000.0),
             ("MID", 50_000.0, 200_000.0),
@@ -5579,8 +5580,8 @@ def q91(spark, sf_dir):
         interval_lookup_join,
     )
 
-    tiers = spark.createDataFrame(
-        [
+    tiers = local_frame(
+        spark, [
             ("T0", 0.0, 50_000.0),
             ("T1", 50_000.0, 100_000.0),
             ("T2", 100_000.0, 200_000.0),
@@ -8671,8 +8672,8 @@ def q186(spark, sf_dir):
         )
     )
     n_common = exact.select("id").join(ann.select("id"), "id").count()
-    return spark.createDataFrame(
-        [(20, n_common, n_common / 20.0)],
+    return local_frame(
+        spark, [(20, n_common, n_common / 20.0)],
         "k long, n_common long, recall double",
     )
 
@@ -17117,8 +17118,8 @@ def q267(spark, sf_dir):
     for lbl, (k, val, n) in zip(labels, res):
         n_le = signed.filter(F.col("v") <= val).count()
         rows.append((lbl, k, val, n_le, n))
-    return spark.createDataFrame(
-        rows, "q_label string, k long, value long, n_le long, n long"
+    return local_frame(
+        spark, rows, "q_label string, k long, value long, n_le long, n long"
     ).orderBy("q_label")
 
 

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..util import ensure_parallelism
+from ..util import ensure_parallelism, local_frame
 from .editdist import _seg_len, _seg_start
 from .entity import _token_set
 
@@ -60,8 +60,8 @@ def _params_table(spark, **kv) -> DataFrame:
     prefix/segment tables are only lossless for the build-time
     parameters)."""
     cols = sorted(kv)
-    return spark.createDataFrame(
-        [tuple(int(kv[c]) for c in cols)],
+    return local_frame(
+        spark, [tuple(int(kv[c]) for c in cols)],
         ", ".join(f"{c} long" for c in cols),
     )
 

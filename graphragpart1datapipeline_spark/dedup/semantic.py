@@ -37,6 +37,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 __all__ = ["semdedup", "semdedup_index", "semdedup_upsert"]
 
 
@@ -221,8 +223,8 @@ def semdedup_index(
     uv = _unit_rows(emb, assign, vec_col, id_col)
     pairs = _within_cluster_pairs(uv, uv, tau, id_col, self_pairs=True)
     labels = connected_components(pairs, src="a", dst="b")
-    params = emb.sparkSession.createDataFrame(
-        [(tau_nano, k, vec_col, id_col)],
+    params = local_frame(
+        emb.sparkSession, [(tau_nano, k, vec_col, id_col)],
         "tau_nano long, k long, vec_col string, id_col string",
     )
     return {

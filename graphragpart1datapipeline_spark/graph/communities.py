@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.relational import top_n_per_group
+from ..util import local_frame
 
 _WARNED_LEIDEN_FALLBACK = False
 
@@ -454,14 +455,14 @@ def detect_communities(
     cols = ["id"] + [f"community_L{i}" for i in range(len(resolutions))]
     schema = "id string, " + ", ".join(f"{c} long" for c in cols[1:])
     if not edge_list:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     memberships = [detector(edge_list, res, seed) for res in resolutions]
     nodes = sorted({n for e in edge_list for n in e})
     data = [
         (n, *[int(m.get(n, -1)) for m in memberships])
         for n in nodes
     ]
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)
 
 
 def community_rollup(
@@ -1310,7 +1311,7 @@ def _leiden_from_canonical(
             .localCheckpoint(eager=False)
         )
     if last_labels is None:
-        return spark.createDataFrame([], "id string, community string")
+        return local_frame(spark, [], "id string, community string")
     if node_map is None:
         return last_labels.select("id", F.col("lab").alias("community"))
     return (

@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 
 def name_or_alias_join(
     left: DataFrame,
@@ -248,18 +250,15 @@ def salted_join_auto(
     per_shard = target_rows_per_shard or max(
         1, int(hot_rows[0]["__n"] * threshold_frac)
     )
-    spark = left.sparkSession
     salt_rows = [
         tuple(r[c] for c in keys)
         + (min(max_salt, max(1, -(-int(r["__cnt"]) // per_shard))),)
         for r in hot_rows
     ]
-    key_schema = left.select(*keys).schema
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    salt_tbl = spark.createDataFrame(
+    salt_tbl = local_frame(
+        left.sparkSession,
         salt_rows,
-        StructType(list(key_schema) + [StructField("__salt", IntegerType())]),
+        left.select(*keys).schema.add("__salt", "integer"),
     )
     lt = left.join(F.broadcast(salt_tbl), keys, "left")
     shard = F.when(

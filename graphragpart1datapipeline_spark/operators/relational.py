@@ -19,6 +19,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 
 def _hash_bucket(id_col: str, seed: str | int, buckets: int) -> Column:
     """md5-derived bucket in [0, buckets): the engine-portable routing/
@@ -662,9 +664,8 @@ def negative_ring_sample(
     for s in sorted(sizes):
         offsets.append((s, acc))
         acc += sizes[s]
-    spark = df.sparkSession
     off_df = F.broadcast(
-        spark.createDataFrame(offsets, "shard long, __off long")
+        local_frame(df.sparkSession, offsets, "shard long, __off long")
     )
     ring = addressed.join(off_df, "shard").select(
         F.col(id_col), (F.col("__off") + F.col("pos")).alias("__gpos")
@@ -1317,13 +1318,13 @@ def exact_kth_smallest(
     lo, hi, n = stats["lo"], stats["hi"], stats["n"]
     spark = df.sparkSession
     if n == 0 or lo is None:
-        return spark.createDataFrame([], "k long, value double")
+        return local_frame(spark, [], "k long, value double")
     for k in ks:
         if not 1 <= k <= n:
             raise ValueError(f"rank {k} outside [1, {n}]")
     if lo == hi:
-        return spark.createDataFrame(
-            [(int(k), float(lo)) for k in ks], "k long, value double"
+        return local_frame(
+            spark, [(int(k), float(lo)) for k in ks], "k long, value double"
         )
     width = (hi - lo) / probe_bins
     idx = F.least(
@@ -1359,8 +1360,8 @@ def exact_kth_smallest(
     ).select(idx.alias("bin"), F.col(value_col).cast("double").alias("v"))
     w = Window.partitionBy("bin").orderBy("v")
     ranked = in_bins.withColumn("r", F.row_number().over(w))
-    probe = df.sparkSession.createDataFrame(
-        [(int(k), int(b), int(r)) for k, b, r in targets],
+    probe = local_frame(
+        df.sparkSession, [(int(k), int(b), int(r)) for k, b, r in targets],
         "k long, bin long, r long",
     )
     return (
@@ -1652,9 +1653,8 @@ def equidepth_histogram(
     v = F.col(value_col).cast("double")
     present = df.filter(v.isNotNull())
     n = present.count()
-    spark = df.sparkSession
     if n == 0:
-        return spark.createDataFrame([], "bucket long, cnt long")
+        return local_frame(df.sparkSession, [], "bucket long, cnt long")
     ks = sorted({math.ceil(i * n / buckets) for i in range(1, buckets)})
     if ks:
         kth = {

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
 from .analysis import tokens
 
 # bump if the tokenizer scheme ever changes — a persisted index built
@@ -71,8 +72,8 @@ def bm25_index(
     dict to :func:`bm25_upsert` / :func:`bm25_query`."""
     dl, tf = _index_parts(df, text_col, id_col)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    params = df.sparkSession.createDataFrame(
-        [(_TOKENIZER_VERSION,)], "tokenizer_version long"
+    params = local_frame(
+        df.sparkSession, [(_TOKENIZER_VERSION,)], "tokenizer_version long"
     )
     return {"postings": tf, "dl": dl, "dfreq": dfreq, "params": params}
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
 from .analysis import tokens
 
 
@@ -135,8 +136,8 @@ def bpe_train(
                 F.lit(f" {pair.replace(' ', '')} "),
             )
         words = words.withColumn("s", expr).localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, "rank int, pair string, merged string, freq long"
+    return local_frame(
+        spark, merges, "rank int, pair string, merged string, freq long"
     )
 
 

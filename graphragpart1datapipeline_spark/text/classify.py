@@ -43,6 +43,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
 from .dsir import hashed_ngram_features
 
 __all__ = [
@@ -470,8 +471,8 @@ def nb_tables(
         .groupBy(label_col, "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    params = spark.createDataFrame(
-        [(int(buckets), int(scale), label_col, id_col, text_col)],
+    params = local_frame(
+        spark, [(int(buckets), int(scale), label_col, id_col, text_col)],
         "buckets long, scale long, label_col string, id_col string, "
         "text_col string",
     )

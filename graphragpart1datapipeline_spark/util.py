@@ -2,7 +2,31 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType, _make_type_verifier
+
+
+def local_frame(spark, rows: list, schema: str | StructType) -> DataFrame:
+    """Driver-built ``rows`` (tuples; ``schema`` a DDL string or
+    StructType) as an Arrow ``LocalTableScan``. From a list,
+    ``createDataFrame`` plans ``Scan ExistingRDD`` over a PythonRDD, and
+    every job reading it starts a Python worker per partition (4 cores,
+    450x3 rows, one ``groupBy().count()``: 0.61-0.79 s vs 0.14-0.31 s
+    from Arrow, same 0.02 s build; a small ``collect()`` runs 0 jobs, not
+    1). Rows pass the list path's verifier and ``toInternal`` first, so
+    out-of-range values raise and a naive datetime is local time."""
+    if not isinstance(schema, StructType):
+        schema = DataType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, schema.toInternal(r))) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -36,6 +36,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import local_frame
 from .search import ivf_assignments
 
 __all__ = ["kmeans_fit", "centroids_df"]
@@ -47,7 +48,8 @@ def centroids_df(
     """Materialize driver-side ``(cid, vector)`` centroids as the
     centroid-table shape the IVF family consumes (``cid``,
     ``embedding``)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
         "cid int, embedding array<double>",
     )

@@ -23,7 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
+from ..util import local_frame
 from .search import l2_norm_expr
 
 
@@ -150,14 +152,15 @@ def mmr_rerank(
         picked_vecs.append(best[3])
         remaining = [c for c in remaining if c[0] != best[1]]
 
-    spark = candidates.sparkSession
-    # id field keeps the CANDIDATES' id type (string doc ids are as
-    # legitimate as longs; hardcoding long would fail/mis-coerce them)
-    id_type = candidates.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
-        [
-            (i + 1, pid, rel, mmr)
-            for i, (pid, rel, mmr) in enumerate(picked)
-        ],
-        f"rank int, {id_col} {id_type}, relevance double, mmr_score double",
+    # id field keeps the CANDIDATES' id field (string doc ids are as
+    # legitimate as longs; hardcoding long would fail/mis-coerce them),
+    # as a StructField so names like "doc id" need no DDL quoting
+    schema = StructType(
+        [StructField("rank", IntegerType()), candidates.schema[id_col]]
+        + [StructField(c, DoubleType()) for c in ("relevance", "mmr_score")]
+    )
+    return local_frame(
+        candidates.sparkSession,
+        [(i + 1, pid, rel, mmr) for i, (pid, rel, mmr) in enumerate(picked)],
+        schema,
     )

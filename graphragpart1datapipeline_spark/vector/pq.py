@@ -42,6 +42,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
 from .search import dot_expr
 
 __all__ = [
@@ -202,8 +203,8 @@ def _book_df(spark, book: dict, persistable: bool = False) -> DataFrame:
         for (s, c), v in sorted(book.items())
     ]
     name = "centroid" if persistable else "__cv"
-    return spark.createDataFrame(
-        rows, f"sub int, cid int, {name} array<double>"
+    return local_frame(
+        spark, rows, f"sub int, cid int, {name} array<double>"
     )
 
 
@@ -353,9 +354,8 @@ def pq_adc_topk(
             f"pq_adc_topk: query dim {len(q)} != codebook m*dsub "
             f"= {m * dsub}"
         )
-    spark = codes.sparkSession
-    dtable = spark.createDataFrame(
-        [
+    dtable = local_frame(
+        codes.sparkSession, [
             (
                 int(r["sub"]),
                 int(r["cid"]),
@@ -666,8 +666,8 @@ def ivfpq_residual_topk(
                     _l2sq_py(qres[s * dsub : (s + 1) * dsub], r[cv]),
                 )
             )
-    dtable = spark.createDataFrame(
-        rows, "centroid_id long, sub int, code int, __dist double"
+    dtable = local_frame(
+        spark, rows, "centroid_id long, sub int, code int, __dist double"
     )
     cand = codes.join(
         assignments.select(

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
+from ..util import local_frame
+
 
 class IvfDriftError(ValueError):
     """Raised by :func:`ivf_upsert` when an increment's assignment
@@ -444,8 +446,8 @@ def ivf_upsert(
     new_mean = (
         stats["mean_cos"] * stats["n"] + inc["mean_cos"] * inc["n"]
     ) / n_total
-    spark.createDataFrame(
-        [(n_total, float(new_mean))], "n long, mean_cos double"
+    local_frame(
+        spark, [(n_total, float(new_mean))], "n long, mean_cos double"
     ).write.mode("overwrite").parquet(path + "_stats")
     cid_type = dict(assign.dtypes)["centroid_id"]
     return spark.read.parquet(path).select(
@@ -535,8 +537,8 @@ def ivf_delete(
                 .parquet(path)
             )
         stats = spark.read.parquet(path + "_stats").collect()[0]
-        spark.createDataFrame(
-            [(max(0, stats["n"] - n_removed), stats["mean_cos"])],
+        local_frame(
+            spark, [(max(0, stats["n"] - n_removed), stats["mean_cos"])],
             "n long, mean_cos double",
         ).write.mode("overwrite").parquet(path + "_stats")
     return spark.read.parquet(path).select(
@@ -771,8 +773,8 @@ def ivf_tune(
         (p for p, _, r in rows if r >= target_recall), rows[-1][0]
     )
     chosen_recall = next(r for p, _, r in rows if p == chosen)
-    spark.createDataFrame(
-        [(
+    local_frame(
+        spark, [(
             chosen,
             float(target_recall),
             int(k),
@@ -782,8 +784,8 @@ def ivf_tune(
         "nprobe long, target_recall double, k long, recall double, "
         "met_target boolean",
     ).write.mode("overwrite").parquet(path + "_tuning")
-    return spark.createDataFrame(
-        [(p, h, r, p == chosen) for p, h, r in rows],
+    return local_frame(
+        spark, [(p, h, r, p == chosen) for p, h, r in rows],
         "nprobe long, hits long, recall double, chosen boolean",
     )
 
