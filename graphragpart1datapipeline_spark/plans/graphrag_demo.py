@@ -10,7 +10,10 @@ output of each stage feeds the next exactly as the reference's I/O
 managers hand Parquet between assets (io_managers.py:76-232). A real
 deployment swaps hash_embed for a model-backed pandas_udf and the
 driver-local community stage for its bounded contract — no plan shape
-changes.
+changes. The stages read more than once pin their output (eager
+``localCheckpoint``): ``deduped``, ``articles`` and ``chunk_embeddings``
+— the last is read by the caller and by ``search_demo``, so a swapped-in
+model embedder runs once per run and both see the same vectors.
 """
 
 from __future__ import annotations
@@ -46,8 +49,13 @@ def build_graphrag_pipeline(sf_dir: str, checkpoint_dir: str | None = None) -> P
 
     @p.stage("deduped", deps=["documents"])
     def deduped(spark: SparkSession, docs: DataFrame) -> DataFrame:
-        # exact content dedup before any downstream work (cheapest cut)
-        return exact_dedup(docs, text_col="text", id_col="doc_id")
+        # exact content dedup before any downstream work (cheapest cut);
+        # three stages read it. The pin is eager so the dedup runs once
+        # before any reader: a lazy one races when two jobs, or the two
+        # branches of graph_edges' union, read it first
+        return exact_dedup(docs, text_col="text", id_col="doc_id").localCheckpoint(
+            eager=True
+        )
 
     @p.stage("articles", deps=["deduped"])
     def articles(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -61,7 +69,7 @@ def build_graphrag_pipeline(sf_dir: str, checkpoint_dir: str | None = None) -> P
                 F.lit("\n== Details ==\n"),
                 F.substring(F.col("text"), 81, 1 << 30),
             ).alias("text"),
-        )
+        ).localCheckpoint(eager=True)  # read by sections and chunks
 
     @p.stage("sections", deps=["articles"])
     def sections(spark: SparkSession, arts: DataFrame) -> DataFrame:
@@ -115,9 +123,10 @@ def build_graphrag_pipeline(sf_dir: str, checkpoint_dir: str | None = None) -> P
 
     @p.stage("chunk_embeddings", deps=["chunks"])
     def chunk_embeddings(spark: SparkSession, ch: DataFrame) -> DataFrame:
+        # read by search_demo and by the caller (the vector store)
         return ch.select(
             "chunk_id", "doc_id", hash_embed("text", dim=32).alias("embedding")
-        )
+        ).localCheckpoint(eager=True)
 
     @p.stage("graph_edges", deps=["deduped"])
     def graph_edges(spark: SparkSession, docs: DataFrame) -> DataFrame:
