@@ -4,7 +4,8 @@ current from a document CHANGE FEED — without ever recomputing the
 corpus. This is the operating mode a 100 TB pipeline actually runs in:
 the initial build happens once; every day after that is an increment.
 
-State layout (all versioned parquet, crash-safe like streaming/cdc):
+State layout (versioned tables — ``sources/versioned.py`` owns the
+layout and the commit protocol):
 
     root/docs/v{N}   CDC document state (+__cdc_seq, +__cdc_deleted)
     root/lsh/v{N}    (doc_id, band, bucket) LSH index of LIVE docs
@@ -46,30 +47,13 @@ from ..dedup.minhash import (
     minhash_signatures,
 )
 from ..operators.relational import cdc_live, cdc_upsert_state
-from ..streaming.cdc import _latest_version, init_cdc_state
+from ..sources.versioned import read_version, write_version
+from ..streaming.cdc import init_cdc_state
 from ..vector.search import hash_embed
 
 NUM_HASHES = 8
 BANDS = 4
 EMB_DIM = 16
-
-
-def _read_latest(spark: SparkSession, d: str) -> tuple[DataFrame, int]:
-    """(newest committed version of ``d``, its number), via the session FS."""
-    v = _latest_version(d, spark)
-    if v < 0:
-        raise FileNotFoundError(d)
-    return spark.read.parquet(os.path.join(d, f"v{v}")), v
-
-
-def _write_next(df: DataFrame, d: str, v: int) -> str:
-    """Write (over any uncommitted leftover) and commit ``d/v{v}``."""
-    from ..streaming.cdc import _mark_committed
-
-    vdir = os.path.join(d, f"v{v}")
-    df.write.mode("overwrite").parquet(vdir)
-    _mark_committed(df.sparkSession, vdir)
-    return vdir
 
 
 def _lsh_rows(docs: DataFrame) -> DataFrame:
@@ -89,10 +73,12 @@ def init_corpus_state(
     spark: SparkSession, root: str, docs: DataFrame
 ) -> None:
     """One-time build: seed the CDC state and derive both indexes from
-    the initial live corpus. ``docs`` = (doc_id, text)."""
+    the initial live corpus. ``docs`` = (doc_id, text). Re-seeding a
+    used ``root`` commits a new version of each, so reads serve the new
+    seed."""
     init_cdc_state(docs.select("doc_id", "text"), os.path.join(root, "docs"))
-    _write_next(_lsh_rows(docs), os.path.join(root, "lsh"), 0)
-    _write_next(_emb_rows(docs), os.path.join(root, "emb"), 0)
+    write_version(_lsh_rows(docs), os.path.join(root, "lsh"))
+    write_version(_emb_rows(docs), os.path.join(root, "emb"))
 
 
 def apply_increment(
@@ -109,9 +95,9 @@ def apply_increment(
     lsh_dir = os.path.join(root, "lsh")
     emb_dir = os.path.join(root, "emb")
 
-    state, sv = _read_latest(spark, docs_dir)
-    old_lsh, lv = _read_latest(spark, lsh_dir)
-    old_emb, ev = _read_latest(spark, emb_dir)
+    state, sv = read_version(spark, docs_dir)
+    old_lsh, lv = read_version(spark, lsh_dir)
+    old_emb, ev = read_version(spark, emb_dir)
     touched = changes.select("doc_id").distinct()
 
     # advisory: which incoming upserts near-duplicate the standing
@@ -130,17 +116,17 @@ def apply_increment(
     new_state = cdc_upsert_state(state, changes, ["doc_id"], "seq")
     live = Observation()
     n_live = F.count_if(~F.coalesce(F.col("__cdc_deleted"), F.lit(False)))
-    vdir = _write_next(new_state.observe(live, n_live.alias("n")), docs_dir, sv + 1)
+    vdir = write_version(new_state.observe(live, n_live.alias("n")), docs_dir, sv + 1)
     committed = spark.read.schema(new_state.schema).parquet(vdir)
     live_touched = cdc_live(committed).join(touched, "doc_id", "left_semi")
     new_lsh = old_lsh.join(touched, "doc_id", "left_anti").unionByName(
         _lsh_rows(live_touched)
     )
-    _write_next(new_lsh, lsh_dir, lv + 1)
+    write_version(new_lsh, lsh_dir, lv + 1)
     new_emb = old_emb.join(touched, "doc_id", "left_anti").unionByName(
         _emb_rows(live_touched)
     )
-    _write_next(new_emb, emb_dir, ev + 1)
+    write_version(new_emb, emb_dir, ev + 1)
 
     # a struct is never NULL: a NULL key counts once, as in distinct()
     n_changes, n_touched = changes.agg(
@@ -157,12 +143,11 @@ def apply_increment(
 def rebuild_indexes(spark: SparkSession, root: str) -> dict[str, DataFrame]:
     """From-scratch derivation over the current live state — the
     equivalence target the incremental path must match."""
-    live = cdc_live(_read_latest(spark, os.path.join(root, "docs"))[0])
+    live = cdc_live(read_version(spark, os.path.join(root, "docs"))[0])
     return {"lsh": _lsh_rows(live), "emb": _emb_rows(live)}
 
 
 def read_indexes(spark: SparkSession, root: str) -> dict[str, DataFrame]:
     return {
-        "lsh": _read_latest(spark, os.path.join(root, "lsh"))[0],
-        "emb": _read_latest(spark, os.path.join(root, "emb"))[0],
+        k: read_version(spark, os.path.join(root, k))[0] for k in ("lsh", "emb")
     }

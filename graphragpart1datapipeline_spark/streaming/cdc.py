@@ -2,176 +2,67 @@
 stream with a foreachBatch upsert loop (St1 micro-batch surface; the
 streaming face of ``operators.relational.cdc_upsert_state``).
 
-State is versioned — each micro-batch writes ``state_dir/v{N+1}`` from
-``v{N}`` rather than overwriting in place (a reader never observes a
-half-written table, and a crashed batch leaves the previous version
-intact; Delta's transaction log solves the same problem — this is the
-plain-parquet equivalent). The merge itself is out-of-order-safe
-(per-key last-applied seq + delete tombstones), so replayed or late
+State is a versioned table (``sources/versioned.py`` owns the layout
+and the commit protocol): each micro-batch writes ``state_dir/v{N+1}``
+from ``v{N}``. The merge itself is out-of-order-safe (per-key
+last-applied seq + delete tombstones), so replayed or late
 micro-batches converge to the same table as one global pass.
-
-COMMIT PROTOCOL: a version directory counts as committed only once a
-marker file exists inside it — ``_SUCCESS`` (what FileOutputCommitter
-writes at job commit) or the explicit ``_COMMITTED`` this module
-writes AFTER every versioned write returns. The explicit marker is
-what makes the "a reader never observes a half-written version"
-contract hold even where _SUCCESS is unreliable: under committer v2
-or S3A committers, task-committed part files land in the final
-directory before job commit, so a crash mid-write of v{N+1} leaves a
-directory that LOOKS newest but is half-written. ``_latest_version``
-skips any unmarked directory, and :func:`prune_state_versions` GCs
-such crash leftovers.
 """
 
 from __future__ import annotations
-
-import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.relational import cdc_upsert_state
+from ..sources.versioned import (
+    latest_version,
+    prune_state_versions,
+    read_version,
+    write_version,
+)
 
-_VERSION_RE = re.compile(r"^v(\d+)$")
-_COMMIT_MARKERS = ("_SUCCESS", "_COMMITTED")
-
-
-def _hadoop_fs(spark: SparkSession, some_path: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(some_path)
-    return jvm, path.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _mark_committed(spark: SparkSession, vdir: str) -> None:
-    """Write the explicit ``_COMMITTED`` marker into ``vdir`` — called
-    only after every table write under the version directory has
-    returned, so the marker's existence IS the commit point (a single
-    empty-file create, atomic on HDFS/local; on S3 the PUT is atomic
-    per-object). Version readers require a marker; writers must call
-    this as their last step."""
-    jvm, fs = _hadoop_fs(spark, vdir)
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(vdir, "_COMMITTED"), True
-    )
-    out.close()
-
-
-def _is_committed_fs(jvm, fs, vdir_path) -> bool:
-    return any(
-        fs.exists(jvm.org.apache.hadoop.fs.Path(vdir_path, m))
-        for m in _COMMIT_MARKERS
-    )
-
-
-def _latest_version(state_dir: str, spark: SparkSession | None = None) -> int:
-    """Newest COMMITTED version under ``state_dir`` — a v{N} directory
-    without a ``_SUCCESS``/``_COMMITTED`` marker is a crashed write in
-    progress, never "newest" (see the module commit protocol). With a
-    session, the listing goes through the Hadoop FileSystem API — so
-    state on HDFS/S3 resolves exactly like local disk (an
-    ``os.listdir`` probe only sees the driver's filesystem, the
-    ivf_tuned_nprobe bug class); without one it falls back to the
-    local listing."""
-    if spark is not None:
-        jvm, fs = _hadoop_fs(spark, state_dir)
-        path = jvm.org.apache.hadoop.fs.Path(state_dir)
-        if not fs.exists(path):
-            return -1
-        versions = [
-            int(m.group(1))
-            for st in fs.listStatus(path)
-            if (m := _VERSION_RE.match(st.getPath().getName()))
-            and _is_committed_fs(jvm, fs, st.getPath())
-        ]
-        return max(versions, default=-1)
-    if not os.path.isdir(state_dir):
-        return -1
-    versions = [
-        int(m.group(1))
-        for d in os.listdir(state_dir)
-        if (m := _VERSION_RE.match(d))
-        and any(
-            os.path.exists(os.path.join(state_dir, d, mk))
-            for mk in _COMMIT_MARKERS
-        )
-    ]
-    return max(versions, default=-1)
+__all__ = [
+    "init_cdc_state",
+    "prune_state_versions",
+    "read_cdc_state",
+    "stream_cdc_apply",
+]
 
 
 def init_cdc_state(base: DataFrame, state_dir: str) -> None:
-    """Seed version 0 of the state from a base snapshot (adds the
-    last-applied-seq and tombstone bookkeeping columns)."""
+    """Seed a new state version from a base snapshot (adds the
+    last-applied-seq and tombstone bookkeeping columns). Re-seeding a
+    used ``state_dir`` commits on top of its newest version, so reads
+    serve the new seed."""
     seeded = base.withColumn("__cdc_seq", F.lit(None).cast("long")).withColumn(
         "__cdc_deleted", F.lit(False)
     )
-    v0 = os.path.join(state_dir, "v0")
-    seeded.write.mode("overwrite").parquet(v0)
-    _mark_committed(base.sparkSession, v0)
+    write_version(seeded, state_dir)
 
 
 def read_cdc_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The newest committed state version."""
-    v = _latest_version(state_dir, spark)
-    if v < 0:
-        raise FileNotFoundError(f"no CDC state under {state_dir}")
-    return spark.read.parquet(os.path.join(state_dir, f"v{v}"))
+    return read_version(spark, state_dir)[0]
 
 
-def prune_state_versions(
-    spark: SparkSession, state_dir: str, keep: int = 2
-) -> list[int]:
-    """Garbage-collect old state versions, keeping the newest ``keep``
-    (≥ 1 — the current version is never deletable). Without pruning, a
-    long-running foreachBatch loop accumulates one full state copy per
-    micro-batch — at 100 TB that is the storage bill, not a detail.
-    ``keep ≥ 2`` preserves the crash contract (the previous version
-    survives until the next batch commits on top of the current one).
-    UNCOMMITTED directories (no ``_SUCCESS``/``_COMMITTED`` marker —
-    crashed writes) below the newest committed version are GC'd —
-    EXCEPT when they fall among the newest ``keep`` version numbers
-    overall: a state dir written before the marker protocol existed
-    (or with ``mapreduce.fileoutputcommitter.marksuccessfuljobs``
-    disabled) has valid marker-less versions, and deleting all of them
-    on the first post-upgrade prune would leave a single surviving
-    version — breaking the ``keep ≥ 2`` crash contract exactly when a
-    fallback matters most. Keeping the newest ``keep`` numbers means a
-    genuine crash leftover is GC'd after ``keep`` more batches commit
-    over it, while a pre-upgrade fallback version survives the
-    migration window. An unmarked directory ABOVE the newest committed
-    version is always left alone (a concurrent writer's in-flight
-    version; the serial foreachBatch loop never races itself, but
-    prune stays safe to call out-of-band). Deletion goes through the
-    Hadoop FileSystem API (HDFS/S3-correct). Returns the deleted
-    version numbers."""
-    if keep < 1:
-        raise ValueError(f"prune_state_versions: keep must be >= 1, got {keep}")
-    jvm, fs = _hadoop_fs(spark, state_dir)
-    path = jvm.org.apache.hadoop.fs.Path(state_dir)
-    if not fs.exists(path):
-        return []
-    committed, uncommitted = [], []
-    for st in fs.listStatus(path):
-        m = _VERSION_RE.match(st.getPath().getName())
-        if not m:
-            continue
-        (
-            committed
-            if _is_committed_fs(jvm, fs, st.getPath())
-            else uncommitted
-        ).append(int(m.group(1)))
-    committed.sort()
-    doomed = committed[:-keep] if len(committed) > keep else []
-    if committed:
-        newest_overall = sorted(committed + uncommitted)[-keep:]
-        doomed += [
-            v
-            for v in uncommitted
-            if v < committed[-1] and v not in newest_overall
-        ]
-    for v in sorted(doomed):
-        fs.delete(jvm.org.apache.hadoop.fs.Path(state_dir, f"v{v}"), True)
-    return sorted(doomed)
+def _require_state(spark: SparkSession, *dirs: str) -> None:
+    """Raise FileNotFoundError naming the first of ``dirs`` without a
+    committed version — checked before a stream starts, so the error
+    does not surface from inside foreachBatch."""
+    for d in dirs:
+        if latest_version(spark, d) < 0:
+            raise FileNotFoundError(f"no committed version under {d}")
+
+
+def _fold_batch(
+    batch_df: DataFrame, state_dir: str, keys: list[str], seq_col: str, op_col: str
+) -> None:
+    """Fold one change batch into the newest state version of
+    ``state_dir``, committing the result as the next version."""
+    state, v = read_version(batch_df.sparkSession, state_dir)
+    merged = cdc_upsert_state(state, batch_df, keys, seq_col, op_col=op_col)
+    write_version(merged, state_dir, v + 1)
 
 
 def stream_cdc_apply(
@@ -185,20 +76,14 @@ def stream_cdc_apply(
 ):
     """Run the change stream into the versioned state with foreachBatch.
     ``changes`` is a streaming DataFrame carrying full-row images plus
-    (seq_col, op_col). Call :func:`init_cdc_state` first. Returns the
-    StreamingQuery (``available_now=True`` drains the backlog and
-    stops — the incremental-batch operating mode)."""
+    (seq_col, op_col). Call :func:`init_cdc_state` first (raises
+    FileNotFoundError otherwise). Returns the StreamingQuery
+    (``available_now=True`` drains the backlog and stops — the
+    incremental-batch operating mode)."""
+    _require_state(changes.sparkSession, state_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        v = _latest_version(state_dir, spark)
-        state = spark.read.parquet(os.path.join(state_dir, f"v{v}"))
-        merged = cdc_upsert_state(
-            state, batch_df, keys, seq_col, op_col=op_col
-        )
-        vdir = os.path.join(state_dir, f"v{v + 1}")
-        merged.write.mode("overwrite").parquet(vdir)
-        _mark_committed(spark, vdir)
+        _fold_batch(batch_df, state_dir, keys, seq_col, op_col)
 
     writer = changes.writeStream.foreachBatch(apply_batch).outputMode(
         "update"

@@ -4,9 +4,9 @@ by Structured Streaming micro-batches instead of one batch increment.
 
 Each foreachBatch call folds one micro-batch of full-row changes
 (id, text, embedding, seq, op) into EVERY persisted maintenance
-artifact, and every artifact is versioned on disk between batches
-(the streaming/cdc.py versioning contract: a reader never observes a
-half-written table; a crashed batch leaves v{N} intact):
+artifact, and every artifact but the IVF/PQ indexes is a versioned
+table between batches (``sources/versioned.py`` owns the layout and
+the commit protocol):
 
     work_dir/docs/v{N}    CDC'd corpus text state
     work_dir/ndix/v{N}    hyperplane-LSH near-dup index tables
@@ -47,7 +47,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cdc import _latest_version, _mark_committed, init_cdc_state
+from ..sources.versioned import prune_state_versions, read_version, write_version
+from .cdc import _fold_batch, _require_state, init_cdc_state
 
 __all__ = [
     "init_maintenance_state",
@@ -58,26 +59,6 @@ __all__ = [
 _ND_KEYS = ("buckets", "params")
 _BM_KEYS = ("postings", "dl", "dfreq", "params")
 _NB_KEYS = ("counts", "docs", "params")
-
-
-def _write_tables(tables: dict[str, DataFrame], vdir: str, keys) -> None:
-    """Write every sub-table, THEN mark the version directory committed
-    — a multi-table version has no single _SUCCESS of its own, so the
-    explicit marker is what makes the vdir visible to _latest_version
-    (the streaming/cdc.py commit protocol)."""
-    spark = None
-    for key in keys:
-        spark = tables[key].sparkSession
-        tables[key].write.mode("overwrite").parquet(
-            os.path.join(vdir, key)
-        )
-    _mark_committed(spark, vdir)
-
-
-def _read_tables(spark: SparkSession, vdir: str, keys) -> dict[str, DataFrame]:
-    return {
-        key: spark.read.parquet(os.path.join(vdir, key)) for key in keys
-    }
 
 
 def init_maintenance_state(
@@ -96,17 +77,19 @@ def init_maintenance_state(
     nb_label_col: str | None = None,
     nb_buckets: int = 4096,
 ) -> None:
-    """Seed v0 of every artifact from the day-0 corpus: CDC doc state,
-    LSH near-dup index, CC labels of the day-0 pair graph, BM25 index,
-    IVF index (+ its _stats drift baseline). ``pq_m``: when set, ALSO
+    """Seed every artifact from the day-0 corpus: CDC doc state, LSH
+    near-dup index, CC labels of the day-0 pair graph, BM25 index, IVF
+    index (+ its _stats drift baseline). Each versioned artifact gets a
+    new version on top of any earlier one, so re-seeding a used
+    ``work_dir`` serves the new seed. ``pq_m``: when set, ALSO
     train an m-subspace PQ codebook on the day-0 embeddings and build
     the compressed codes index at ``work_dir/pq`` (vector/pq.py
     pq_build_index — frozen codebook persisted beside the codes);
     :func:`stream_maintenance` then folds every increment into it.
     ``nb_label_col``: when set, ``corpus_docs`` (and every change row)
-    must carry that label column; v0 of a VERSIONED NB classifier
+    must carry that label column; a VERSIONED NB classifier
     index (text/classify.py nb_tables — raw counts + doc registry +
-    params) lands at ``work_dir/nb/v0`` and the loop folds every
+    params) lands at ``work_dir/nb`` and the loop folds every
     increment with the EXACT additive merge (stream == batch ==
     retrain, the q243 contract)."""
     from ..dedup.embedding import embedding_near_dup_pairs
@@ -118,17 +101,21 @@ def init_maintenance_state(
     init_cdc_state(
         corpus_docs.select(id_col, text_col), os.path.join(work_dir, "docs")
     )
-    ndix = embedding_lsh_index(corpus_emb, vec_col=vec_col, id_col=vec_id_col)
-    _write_tables(ndix, os.path.join(work_dir, "ndix", "v0"), _ND_KEYS)
+    write_version(
+        embedding_lsh_index(corpus_emb, vec_col=vec_col, id_col=vec_id_col),
+        os.path.join(work_dir, "ndix"),
+    )
     pairs = embedding_near_dup_pairs(
         corpus_emb, threshold=threshold, vec_col=vec_col, id_col=vec_id_col
     )
-    labels = connected_components(pairs, src="a", dst="b")
-    cc0 = os.path.join(work_dir, "cc", "v0")
-    labels.write.mode("overwrite").parquet(cc0)
-    _mark_committed(corpus_docs.sparkSession, cc0)
-    bmix = bm25_index(corpus_docs, text_col=text_col, id_col=id_col)
-    _write_tables(bmix, os.path.join(work_dir, "bm25", "v0"), _BM_KEYS)
+    write_version(
+        connected_components(pairs, src="a", dst="b"),
+        os.path.join(work_dir, "cc"),
+    )
+    write_version(
+        bm25_index(corpus_docs, text_col=text_col, id_col=id_col),
+        os.path.join(work_dir, "bm25"),
+    )
     ivf_build_index(
         corpus_emb,
         centroids,
@@ -157,7 +144,7 @@ def init_maintenance_state(
             label_col=nb_label_col, text_col=text_col, id_col=id_col,
             buckets=nb_buckets,
         )
-        _write_tables(nbt, os.path.join(work_dir, "nb", "v0"), _NB_KEYS)
+        write_version(nbt, os.path.join(work_dir, "nb"))
 
 
 def read_maintenance_state(spark: SparkSession, work_dir: str) -> dict:
@@ -165,20 +152,15 @@ def read_maintenance_state(spark: SparkSession, work_dir: str) -> dict:
     ``docs`` / ``labels`` DataFrames, ``ndix`` / ``bm25`` table dicts,
     and the ``ivf`` index path (hand to ivf_topk via its persisted
     assignments)."""
-    from .cdc import read_cdc_state
-
-    out = {"docs": read_cdc_state(spark, os.path.join(work_dir, "docs"))}
-    for name, keys in (("ndix", _ND_KEYS), ("bm25", _BM_KEYS)):
-        base = os.path.join(work_dir, name)
-        v = _latest_version(base, spark)
-        if v < 0:
-            raise FileNotFoundError(f"no {name} state under {base}")
-        out[name] = _read_tables(spark, os.path.join(base, f"v{v}"), keys)
-    cc_base = os.path.join(work_dir, "cc")
-    v = _latest_version(cc_base, spark)
-    if v < 0:
-        raise FileNotFoundError(f"no cc state under {cc_base}")
-    out["labels"] = spark.read.parquet(os.path.join(cc_base, f"v{v}"))
+    out = {
+        key: read_version(spark, os.path.join(work_dir, name), tables)[0]
+        for key, name, tables in (
+            ("docs", "docs", None),
+            ("ndix", "ndix", _ND_KEYS),
+            ("bm25", "bm25", _BM_KEYS),
+            ("labels", "cc", None),
+        )
+    }
     out["ivf"] = os.path.join(work_dir, "ivf")
     from ..vector.search import ivf_centroids
 
@@ -197,12 +179,11 @@ def read_maintenance_state(spark: SparkSession, work_dir: str) -> dict:
     pq_p = jvm.org.apache.hadoop.fs.Path(pq_path + "_codebook")
     if fs.exists(pq_p):
         out["pq"] = pq_path
-    nb_base = os.path.join(work_dir, "nb")
-    nb_v = _latest_version(nb_base, spark)
-    if nb_v >= 0:
-        out["nb"] = _read_tables(
-            spark, os.path.join(nb_base, f"v{nb_v}"), _NB_KEYS
-        )
+    try:
+        nb_dir = os.path.join(work_dir, "nb")
+        out["nb"] = read_version(spark, nb_dir, _NB_KEYS)[0]
+    except FileNotFoundError:
+        pass
     return out
 
 
@@ -247,8 +228,9 @@ def stream_maintenance(
     themselves, inflating the baseline) needs a looser gate.
 
     ``keep_versions``: prune each versioned artifact to the newest N
-    copies after every batch (:func:`..cdc.prune_state_versions` —
-    ≥ 2 keeps the crash contract). Unpruned, a long-running loop
+    copies after every batch
+    (:func:`..sources.versioned.prune_state_versions` — ≥ 2 keeps the
+    crash contract). Unpruned, a long-running loop
     stores one full state copy PER MICRO-BATCH; at 100 TB retention
     is the storage bill. ``None`` keeps everything (audit mode).
 
@@ -283,7 +265,6 @@ def stream_maintenance(
         embedding_near_dup_incremental,
     )
     from ..graph.communities import connected_components_incremental
-    from ..operators.relational import cdc_upsert_state
     from ..text.bm25_index import bm25_upsert
     from ..vector.search import ivf_upsert
 
@@ -294,6 +275,7 @@ def stream_maintenance(
     ivf_path = os.path.join(work_dir, "ivf")
     pq_path = os.path.join(work_dir, "pq")
     nb_dir = os.path.join(work_dir, "nb")
+    _require_state(changes.sparkSession, docs_dir, ndix_dir, cc_dir, bm_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -301,18 +283,10 @@ def stream_maintenance(
 
         # 1. CDC: fold the raw batch (stale rows included — latest-wins
         # drops them) into the versioned doc state
-        v = _latest_version(docs_dir, spark)
-        state = spark.read.parquet(os.path.join(docs_dir, f"v{v}"))
-        merged = cdc_upsert_state(
-            state,
+        _fold_batch(
             batch_df.select(id_col, text_col, seq_col, op_col),
-            [id_col],
-            seq_col,
-            op_col=op_col,
+            docs_dir, [id_col], seq_col, op_col,
         )
-        docs_vdir = os.path.join(docs_dir, f"v{v + 1}")
-        merged.write.mode("overwrite").parquet(docs_vdir)
-        _mark_committed(spark, docs_vdir)
 
         # 2. the batch's CLEAN increment: the per-key LATEST row decides
         # first (same seq-desc, op-desc tie-break as cdc_upsert_state),
@@ -322,12 +296,10 @@ def stream_maintenance(
         # NB classifier: only when the init seeded work_dir/nb — its
         # label column must then ride every change row, and the clean
         # increment keeps it alongside (id, text, vec)
-        nb_v = _latest_version(nb_dir, spark)
-        nb_tabs = (
-            _read_tables(spark, os.path.join(nb_dir, f"v{nb_v}"), _NB_KEYS)
-            if nb_v >= 0
-            else None
-        )
+        try:
+            nb_tabs, nb_v = read_version(spark, nb_dir, _NB_KEYS)
+        except FileNotFoundError:
+            nb_tabs = None
         nb_label_col = (
             nb_tabs["params"].collect()[0]["label_col"]
             if nb_tabs is not None
@@ -352,8 +324,6 @@ def stream_maintenance(
             # a delete-heavy stream accumulates doc-state versions
             # unboundedly despite keep_versions
             if keep_versions is not None:
-                from .cdc import prune_state_versions
-
                 prune_state_versions(spark, docs_dir, keep=keep_versions)
             return
         inc_emb = inc.select(
@@ -363,10 +333,7 @@ def stream_maintenance(
         # 3. near-dup: probe the persisted index (new x corpus-so-far)
         # + bucket the batch against itself (new x new), then fold the
         # batch into the index for the NEXT micro-batch
-        v = _latest_version(ndix_dir, spark)
-        ndix = _read_tables(
-            spark, os.path.join(ndix_dir, f"v{v}"), _ND_KEYS
-        )
+        ndix, v = read_version(spark, ndix_dir, _ND_KEYS)
         mixed = embedding_near_dup_incremental(
             inc_emb, ndix, threshold=threshold,
             vec_col=vec_col, id_col=vec_id_col,
@@ -381,24 +348,21 @@ def stream_maintenance(
         ndix2 = embedding_lsh_upsert(
             ndix, inc_emb, vec_col=vec_col, id_col=vec_id_col
         )
-        _write_tables(ndix2, os.path.join(ndix_dir, f"v{v + 1}"), _ND_KEYS)
+        write_version(ndix2, ndix_dir, v + 1)
 
         # 4. connected components: fold the batch's edges into labels
-        v = _latest_version(cc_dir, spark)
-        labels = spark.read.parquet(os.path.join(cc_dir, f"v{v}"))
-        labels2 = connected_components_incremental(labels, new_edges)
-        cc_vdir = os.path.join(cc_dir, f"v{v + 1}")
-        labels2.write.mode("overwrite").parquet(cc_vdir)
-        _mark_committed(spark, cc_vdir)
+        labels, v = read_version(spark, cc_dir)
+        write_version(
+            connected_components_incremental(labels, new_edges), cc_dir, v + 1
+        )
 
         # 5. BM25: tokenize only the batch, replace-then-extend postings
-        v = _latest_version(bm_dir, spark)
-        bmix = _read_tables(spark, os.path.join(bm_dir, f"v{v}"), _BM_KEYS)
+        bmix, v = read_version(spark, bm_dir, _BM_KEYS)
         bmix2 = bm25_upsert(
             bmix, inc.select(id_col, text_col),
             text_col=text_col, id_col=id_col,
         )
-        _write_tables(bmix2, os.path.join(bm_dir, f"v{v + 1}"), _BM_KEYS)
+        write_version(bmix2, bm_dir, v + 1)
 
         # 6. IVF: assign only the batch (id-collision + drift gated).
         # foreachBatch is AT-LEAST-ONCE: on a crash-replay every other
@@ -494,9 +458,7 @@ def stream_maintenance(
                 folded = nb_fold_increment(
                     nb_tabs, inc.select(id_col, text_col, nb_label_col)
                 )
-                _write_tables(
-                    folded, os.path.join(nb_dir, f"v{nb_v + 1}"), _NB_KEYS
-                )
+                write_version(folded, nb_dir, nb_v + 1)
             elif nb_present != n_inc:
                 raise ValueError(
                     f"stream_maintenance: batch {batch_id} ids are "
@@ -510,8 +472,6 @@ def stream_maintenance(
         # 7. retention: one full state copy lands per batch — prune to
         # the newest keep_versions AFTER the batch fully committed
         if keep_versions is not None:
-            from .cdc import prune_state_versions
-
             dirs = [docs_dir, ndix_dir, cc_dir, bm_dir]
             if nb_tabs is not None:
                 dirs.append(nb_dir)

@@ -17,7 +17,7 @@ SF_CORRECT = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     s = get_spark(
         app_name="graphrag-spark-tests",
-        master="local[8]",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
     )
     yield s

@@ -694,7 +694,7 @@ def test_incremental_corpus_evaluates_merge_once(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "c")
     inc.init_corpus_state(spark, root, docs)
     plans = {}
-    write_next = inc._write_next
+    write_next = inc.write_version
 
     class Captured(Exception):
         pass
@@ -708,7 +708,7 @@ def test_incremental_corpus_evaluates_merge_once(spark, tmp_path, monkeypatch):
             raise Captured
         return write_next(df, d, v) if name == "docs" else None
 
-    monkeypatch.setattr(inc, "_write_next", spy)
+    monkeypatch.setattr(inc, "write_version", spy)
     changes = _parquet_frame(
         spark,
         tmp_path / "changes.parquet",
@@ -739,6 +739,7 @@ def test_incremental_corpus_resolves_versions_through_fs(spark, tmp_path):
     URI root works), an uncommitted ``v{N+1}`` crash leftover is
     skipped by the read, and the next write replaces it and commits."""
     from graphragpart1datapipeline_spark.plans import incremental_demo as inc
+    from graphragpart1datapipeline_spark.sources.versioned import read_version
 
     root = "file://" + str(tmp_path / "c")
     docs_dir = os.path.join(root, "docs")
@@ -754,7 +755,7 @@ def test_incremental_corpus_resolves_versions_through_fs(spark, tmp_path):
     leftover = tmp_path / "c" / "docs" / "v1"
     leftover.mkdir()
     _parquet_frame(spark, leftover / "part-0.parquet", {"doc_id": [99], "junk": ["x"]})
-    state, v = inc._read_latest(spark, docs_dir)
+    state, v = read_version(spark, docs_dir)
     assert v == 0 and sorted(r["doc_id"] for r in state.collect()) == [1, 2]
 
     changes = _parquet_frame(
@@ -764,7 +765,7 @@ def test_incremental_corpus_resolves_versions_through_fs(spark, tmp_path):
     )
     assert inc.apply_increment(spark, root, changes)["live_after"] == 3
     assert (leftover / "_COMMITTED").exists()
-    state, v = inc._read_latest(spark, docs_dir)
+    state, v = read_version(spark, docs_dir)
     assert v == 1 and "junk" not in state.columns
     assert sorted(r["doc_id"] for r in state.collect()) == [1, 2, 3]
 

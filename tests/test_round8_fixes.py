@@ -17,15 +17,13 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# ADVICE fix (medium): _latest_version must skip uncommitted versions
+# ADVICE fix (medium): latest_version must skip uncommitted versions
 # ---------------------------------------------------------------------------
 
 
 def test_latest_version_skips_uncommitted_dirs(spark, tmp_path):
-    from graphragpart1datapipeline_spark.streaming.cdc import (
-        _latest_version,
-        read_cdc_state,
-    )
+    from graphragpart1datapipeline_spark.sources.versioned import latest_version
+    from graphragpart1datapipeline_spark.streaming.cdc import read_cdc_state
 
     d = str(tmp_path / "state")
     spark.createDataFrame([(0,)], "x long").write.parquet(
@@ -37,14 +35,13 @@ def test_latest_version_skips_uncommitted_dirs(spark, tmp_path):
         os.path.join(d, "v1")
     )
     os.remove(os.path.join(d, "v1", "_SUCCESS"))
-    assert _latest_version(d, spark) == 0
-    assert _latest_version(d) == 0  # local fallback agrees
+    assert latest_version(spark, d) == 0
     assert read_cdc_state(spark, d).collect()[0]["x"] == 0
 
 
 def test_prune_gcs_uncommitted_crash_leftovers(spark, tmp_path):
+    from graphragpart1datapipeline_spark.sources.versioned import latest_version
     from graphragpart1datapipeline_spark.streaming.cdc import (
-        _latest_version,
         prune_state_versions,
     )
 
@@ -61,28 +58,26 @@ def test_prune_gcs_uncommitted_crash_leftovers(spark, tmp_path):
     deleted = prune_state_versions(spark, d, keep=2)
     assert deleted == [0, 1]
     assert sorted(os.listdir(d)) == ["v2", "v3", "v9"]
-    assert _latest_version(d, spark) == 3
+    assert latest_version(spark, d) == 3
 
 
 def test_multi_table_version_commits_atomically(spark, tmp_path):
-    """_write_tables marks the vdir only after every sub-table landed
+    """write_version marks the vdir only after every sub-table landed
     — a vdir missing the marker (crash between sub-table writes) is
-    invisible to _latest_version."""
-    from graphragpart1datapipeline_spark.streaming.cdc import (
-        _latest_version,
-    )
-    from graphragpart1datapipeline_spark.streaming.maintenance import (
-        _write_tables,
+    invisible to latest_version."""
+    from graphragpart1datapipeline_spark.sources.versioned import (
+        latest_version,
+        write_version,
     )
 
     d = str(tmp_path / "ndix")
     t = spark.createDataFrame([(1,)], "x long")
-    _write_tables({"a": t, "b": t}, os.path.join(d, "v0"), ("a", "b"))
+    write_version({"a": t, "b": t}, d, 0)
     assert os.path.exists(os.path.join(d, "v0", "_COMMITTED"))
-    assert _latest_version(d, spark) == 0
+    assert latest_version(spark, d) == 0
     # crash shape: sub-table written, no vdir marker
     t.write.parquet(os.path.join(d, "v1", "a"))
-    assert _latest_version(d, spark) == 0
+    assert latest_version(spark, d) == 0
 
 
 # ---------------------------------------------------------------------------

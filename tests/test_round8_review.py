@@ -176,8 +176,8 @@ def test_pq_encode_rejects_wrong_dimension_codebook(spark):
 
 
 def test_prune_spares_preupgrade_versions_in_keep_window(spark, tmp_path):
+    from graphragpart1datapipeline_spark.sources.versioned import write_version
     from graphragpart1datapipeline_spark.streaming.cdc import (
-        _mark_committed,
         prune_state_versions,
     )
 
@@ -187,8 +187,7 @@ def test_prune_spares_preupgrade_versions_in_keep_window(spark, tmp_path):
     for v in range(3):
         df.write.mode("overwrite").parquet(str(state / f"v{v}"))
     # first post-upgrade batch writes a marked v3
-    df.write.mode("overwrite").parquet(str(state / "v3"))
-    _mark_committed(spark, str(state / "v3"))
+    write_version(df, str(state), 3)
     deleted = prune_state_versions(spark, str(state), keep=2)
     # v2 is within the newest-2 window: it survives as the crash
     # fallback; v0/v1 are GC'd
@@ -197,10 +196,8 @@ def test_prune_spares_preupgrade_versions_in_keep_window(spark, tmp_path):
     assert (state / "v2").exists() and (state / "v3").exists()
     # a genuine crash leftover below the window still gets GC'd once
     # more committed versions land on top
-    df.write.mode("overwrite").parquet(str(state / "v4"))
-    _mark_committed(spark, str(state / "v4"))
-    df.write.mode("overwrite").parquet(str(state / "v5"))
-    _mark_committed(spark, str(state / "v5"))
+    write_version(df, str(state), 4)
+    write_version(df, str(state), 5)
     assert prune_state_versions(spark, str(state), keep=2) == [2, 3]
 
 
