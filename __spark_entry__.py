@@ -6089,10 +6089,11 @@ def q104(spark, sf_dir):
 def q105(spark, sf_dir):
     """Per-node triangle counts over the co-purchase graph (parts
     sharing an order): canonical a<b orientation makes each triangle
-    materialize exactly once from the wedge self-join + closure join —
-    two equi-joins, exact integer counts (graph-cohesion G-op next to
-    q82 PageRank / q94 LPA; degree-based orientation available for
-    power-law graphs)."""
+    close exactly once as N⁺(a) ∩ N⁺(b) on its lowest edge — one
+    adjacency groupBy, two |E|-row joins, a row-local array_intersect,
+    exact integer counts (graph-cohesion G-op next to q82 PageRank /
+    q94 LPA). The oracle's wedge self-join + closure join counts the
+    same triangles."""
     from graphragpart1datapipeline_spark.graph.triangles import (
         cooccurrence_edges,
         triangle_counts,
@@ -6520,17 +6521,20 @@ def _ktruss_sql(k: int, rounds: int) -> str:
 def q115(spark, sf_dir):
     """5-truss peeling (2 rounds) over the co-purchase graph: edges in
     ≥ 3 triangles, re-checked after weak-edge removal — the edge-level
-    cohesion filter completing the triangle/k-core family. Per round
-    one adjacency groupBy + row-local array_intersect triangle
-    enumeration + one pair-keyed support groupBy."""
+    cohesion filter completing the triangle/k-core family. Same kernel
+    as q245 (graph/truss.py ktruss): per round one adjacency groupBy,
+    two |E|-row joins and a row-local array_intersect give each edge
+    its support. The oracle replays the rounds as wedge enumeration +
+    per-edge triangle credits, a second derivation of the same
+    supports."""
     from graphragpart1datapipeline_spark.graph.triangles import (
         cooccurrence_edges,
-        ktruss_edges,
     )
+    from graphragpart1datapipeline_spark.graph.truss import ktruss
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     edges = cooccurrence_edges(li, "l_orderkey", "l_partkey")
-    return ktruss_edges(edges, k=5, rounds=2, assume_canonical=True)
+    return ktruss(edges, k=5, rounds=2)
 
 
 @_register(
@@ -14453,7 +14457,7 @@ def q244(spark, sf_dir):
     return nb_classify(test, fitted, buckets=512).orderBy("doc_id")
 
 
-def _ktruss_sql(k: int, rounds: int) -> str:
+def _ktruss_intersect_sql(k: int, rounds: int) -> str:
     """Unrolled support-peeling rounds (the fixed-round-replay pattern
     shared with _kcore_sql): round r computes every surviving edge's
     triangle support as |N(a) ∩ N(b)| (distinct common neighbors) and
@@ -14487,7 +14491,7 @@ def _ktruss_sql(k: int, rounds: int) -> str:
     return sql
 
 
-@_register("q245_ktruss", _ktruss_sql(16, 2))
+@_register("q245_ktruss", _ktruss_intersect_sql(16, 2))
 def q245(spark, sf_dir):
     """k-TRUSS decomposition (k=16, 2 fixed peel rounds) over the
     co-purchase graph — the edge-level cohesion filter one notch
@@ -14732,7 +14736,7 @@ def q249(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-def _dhash_sql(g: str, rows: int = 8, cols: int = 8) -> str:
+def _dhash_case_sql(g: str, rows: int = 8, cols: int = 8) -> str:
     """dHash of a 1-based-indexed SQL list expression ``g`` — the
     GENERATED per-bit CASE chain (never hand-copied), bit k set iff
     grid[r][c] < grid[r][c+1], exactly assets.py::dhash_expr."""
@@ -14772,7 +14776,7 @@ def _video_offset_sql() -> str:
       FROM clips, LATERAL (
         SELECT unnest(range(0, len(frames))) AS s) t
     ), sh AS (
-      SELECT vec_id, idx, {_dhash_sql("g")} AS fph FROM fr
+      SELECT vec_id, idx, {_dhash_case_sql("g")} AS fph FROM fr
     ), dfreq AS (
       SELECT fph, COUNT(DISTINCT vec_id) AS nids FROM sh GROUP BY fph
     ), kept AS (
@@ -15493,7 +15497,7 @@ def _binary_warc_blobs(emb: DataFrame) -> DataFrame:
 
 def _warc_image_sql() -> str:
     """Oracle for q255: replay the md5 byte-grid synthesis, the
-    GENERATED dHash CASE chain (_dhash_sql — never hand-copied) and
+    GENERATED dHash CASE chain (_dhash_case_sql — never hand-copied) and
     the banded hamming pigeonhole join. The byte round-trip through
     the binary WARC blobs is the Spark side's to prove (payloads
     embed the record sentinel); the oracle locks the logical
@@ -15518,7 +15522,7 @@ def _warc_image_sql() -> str:
       SELECT rid, list_transform(range(0, 64), j -> {cell}) AS g
       FROM all_recs
     ), fp AS (
-      SELECT rid AS vec_id, {_dhash_sql("g")} AS fp FROM grids
+      SELECT rid AS vec_id, {_dhash_case_sql("g")} AS fp FROM grids
     ), chunks AS (
       SELECT vec_id, fp, t.band,
              (fp >> CAST(t.band * 14 AS INTEGER)) & 16383 AS chunk
@@ -16303,7 +16307,7 @@ def _mime_route_sql() -> str:
              WHEN 'text/plain' THEN length(text) END AS BIGINT)
              AS text_chars,
            CASE WHEN route = 'image/png'
-                THEN {_dhash_sql("grid")} END AS fp
+                THEN {_dhash_case_sql("grid")} END AS fp
     FROM routed ORDER BY doc_id
     """
 

@@ -15,7 +15,8 @@ AQE-broadcast when the frontier shrinks). Edges are localCheckpoint'd
 per round to keep the plan flat (the iterative-op pattern shared with
 label_propagation_communities / pagerank). Rounds needed = peeling
 depth, typically O(log n) in practice; pass ``rounds`` ≥ the expected
-depth or check the returned round count via ``until_fixed_point``.
+depth, or ``rounds=None`` to peel to the fixed point (the convention
+shared with graph/truss.py).
 """
 
 from __future__ import annotations
@@ -23,35 +24,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .triangles import _canonical
+
 
 def kcore_nodes(
     edges: DataFrame,
     k: int,
     src: str = "src",
     dst: str = "dst",
-    rounds: int = 3,
-    until_fixed_point: bool = False,
-    checkpoint: bool = True,
+    rounds: int | None = 3,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Nodes surviving ``rounds`` peeling rounds toward the k-core,
     with their degree in the peeled graph: (node, degree). With
-    ``until_fixed_point=True``, keeps peeling until no node drops
-    (one extra count job per round to detect convergence) — the exact
-    k-core regardless of depth."""
-    if assume_canonical:
-        e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    else:
-        e = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("a"),
-                F.greatest(F.col(src), F.col(dst)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
+    ``rounds=None``, keeps peeling until no node drops (one extra
+    count job per round to detect convergence) — the exact k-core
+    regardless of depth."""
+    if rounds is not None and rounds < 1:
+        raise ValueError(f"kcore_nodes: rounds must be >= 1, got {rounds}")
+    e = _canonical(edges, src, dst, assume_canonical).localCheckpoint(
+        eager=True
+    )
 
     def degrees(ed: DataFrame) -> DataFrame:
         return (
@@ -69,12 +62,10 @@ def kcore_nodes(
         e = (
             e.join(keep.select(F.col("v").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("v").alias("b")), "b", "left_semi")
-        )
-        if checkpoint:
-            e = e.localCheckpoint(eager=True)
-        if until_fixed_point:
+        ).localCheckpoint(eager=True)
+        if rounds is None:
             n = keep.count()
-            if prev_nodes is not None and n == prev_nodes:
+            if n == prev_nodes:
                 break
             prev_nodes = n
         elif r >= rounds:

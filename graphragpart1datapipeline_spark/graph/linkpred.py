@@ -54,10 +54,7 @@ def link_prediction_scores(
         raise ValueError(f"top_k must be >= 1, got {top_k}")
     if max_degree is not None and max_degree < 1:
         raise ValueError(f"max_degree must be >= 1, got {max_degree}")
-    if assume_canonical:
-        e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    else:
-        e = _canonical(edges, src, dst)
+    e = _canonical(edges, src, dst, assume_canonical)
 
     nb = e.select(
         F.col("a").alias("node"), F.col("b").alias("nbr")

@@ -24,8 +24,8 @@ keeps the iterative lineage flat.
 
 Determinism: supports are exact integer counts of distinct common
 neighbors; the peel is synchronous (all edges below threshold drop
-together) — no ordering sensitivity, bit-identical in SQL (q245
-replays the unrolled rounds).
+together) — no ordering sensitivity, bit-identical in SQL (q115 and
+q245 replay the unrolled rounds).
 """
 
 from __future__ import annotations
@@ -41,8 +41,8 @@ __all__ = ["edge_support", "ktruss"]
 def edge_support(
     edges: DataFrame, src: str = "a", dst: str = "b"
 ) -> DataFrame:
-    """(a, b, support) — each canonical (a < b) edge's triangle count:
-    the number of distinct common neighbors of its endpoints. One
+    """(a, b, support) — each canonical (a < b) edge's triangle count
+    (a long): the number of distinct common neighbors of its endpoints. One
     node-keyed groupBy + two edge-keyed joins + a row-local
     ``array_intersect``."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -63,7 +63,9 @@ def edge_support(
         .select(
             "a",
             "b",
-            F.size(F.array_intersect("__na", "__nbb")).alias("support"),
+            F.size(F.array_intersect("__na", "__nbb"))
+            .cast("long")
+            .alias("support"),
         )
     )
 
@@ -81,7 +83,7 @@ def ktruss(
     against the surviving edge set.
 
     ``rounds``: a FIXED number of peel rounds (the oracle-replayable
-    mode — q245 unrolls exactly these rounds in SQL; the result after
+    mode — q115 and q245 unroll exactly these rounds in SQL; the result after
     r rounds is a superset of the true k-truss). ``None`` iterates to
     the fixed point, bounded by ``max_rounds`` (each round removes at
     least one edge before the fixed point, so the bound only cuts

@@ -91,7 +91,9 @@ def init_maintenance_state(
     index (text/classify.py nb_tables — raw counts + doc registry +
     params) lands at ``work_dir/nb`` and the loop folds every
     increment with the EXACT additive merge (stream == batch ==
-    retrain, the q243 contract)."""
+    retrain, the q243 contract). A seed without ``pq_m`` or
+    ``nb_label_col`` removes that artifact left by an earlier seed of
+    the same ``work_dir``."""
     from ..dedup.embedding import embedding_near_dup_pairs
     from ..dedup.incremental import embedding_lsh_index
     from ..graph.communities import connected_components
@@ -145,6 +147,16 @@ def init_maintenance_state(
             buckets=nb_buckets,
         )
         write_version(nbt, os.path.join(work_dir, "nb"))
+    # the reads and the loop treat an optional artifact's presence as
+    # "enabled", so one this seed did not build must not survive it
+    spark = corpus_docs.sparkSession
+    path_cls = spark._jvm.org.apache.hadoop.fs.Path
+    for name, built in (
+        ("pq", pq_m), ("pq_codebook", pq_m), ("nb", nb_label_col)
+    ):
+        if built is None:
+            p = path_cls(os.path.join(work_dir, name))
+            p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
 
 
 def read_maintenance_state(spark: SparkSession, work_dir: str) -> dict:

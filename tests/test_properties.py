@@ -474,6 +474,39 @@ def test_triangle_counts_matches_bruteforce(spark, edges):
     assert got == expected
 
 
+def _peel_truss(pairs, k, rounds):
+    """Synchronous k-truss peel in Python: each round keeps the edges
+    with >= k-2 common neighbors in the current edge set; ``rounds``
+    rounds, or until nothing drops when None. {(a, b): support}."""
+    es = {(min(u, v), max(u, v)) for u, v in pairs if u != v}
+    r = 0
+    while True:
+        adj = {}
+        for u, v in es:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+        sup = {(u, v): len(adj[u] & adj[v]) for u, v in es}
+        kept = {e: s for e, s in sup.items() if s >= k - 2}
+        r += 1
+        if len(kept) == len(es) or (rounds is not None and r >= rounds):
+            return kept
+        es = set(kept)
+
+
+@given(edges=graph_edges, k=st.integers(3, 5), rounds=st.integers(1, 3))
+@SETTINGS
+def test_ktruss_matches_python_peel(spark, edges, k, rounds):
+    from graphragpart1datapipeline_spark.graph.truss import ktruss
+
+    df = spark.createDataFrame(edges or [(0, 0)], "src long, dst long")
+    for mode in (rounds, None):
+        got = {
+            (r["a"], r["b"]): r["support"]
+            for r in ktruss(df, k=k, rounds=mode).collect()
+        }
+        assert got == _peel_truss(edges, k, mode), mode
+
+
 @given(edges=graph_edges, k=st.integers(2, 4))
 @SETTINGS
 def test_kcore_fixed_point_matches_bruteforce(spark, edges, k):
@@ -499,7 +532,7 @@ def test_kcore_fixed_point_matches_bruteforce(spark, edges, k):
     df = spark.createDataFrame(edges or [(0, 0)], "src long, dst long")
     got = {
         r["node"]: r["degree"]
-        for r in kcore_nodes(df, k=k, until_fixed_point=True).collect()
+        for r in kcore_nodes(df, k=k, rounds=None).collect()
     }
     assert got == expected
 

@@ -113,12 +113,7 @@ def test_triangle_counts_orientation_invariant(spark):
     plain = {
         r["node"]: r["triangles"] for r in triangle_counts(edges).collect()
     }
-    oriented = {
-        r["node"]: r["triangles"]
-        for r in triangle_counts(edges, orient_by_degree=True).collect()
-    }
     assert plain == {0: 1, 1: 1, 2: 1}
-    assert oriented == plain
 
 
 # ------------------------------------------------------------- cohorts
@@ -268,9 +263,7 @@ def test_kcore_peels_pendant_chain(spark):
     assert rows == {0: 2, 1: 2, 2: 2}
     fixed = {
         r["node"]: r["degree"]
-        for r in kcore_nodes(
-            edges, k=2, until_fixed_point=True
-        ).collect()
+        for r in kcore_nodes(edges, k=2, rounds=None).collect()
     }
     assert fixed == rows
 
@@ -420,7 +413,7 @@ def test_apply_cdc_idempotent(spark):
 
 
 def test_ktruss_golden(spark):
-    from graphragpart1datapipeline_spark.graph.triangles import ktruss_edges
+    from graphragpart1datapipeline_spark.graph.truss import ktruss
 
     # K4 (every edge in 2 triangles) + a triangle 4-5-6 (support 1)
     # + a pendant edge 6-7 (support 0)
@@ -430,7 +423,7 @@ def test_ktruss_golden(spark):
     )
     out = {
         (r["a"], r["b"]): r["support"]
-        for r in ktruss_edges(edges, k=4, rounds=2).collect()
+        for r in ktruss(edges, k=4, rounds=2).collect()
     }
     # 4-truss (support >= 2): exactly the K4 edges
     assert set(out) == set(k4)
@@ -438,13 +431,13 @@ def test_ktruss_golden(spark):
     # 3-truss keeps both the K4 and the extra triangle, not the pendant
     out3 = {
         (r["a"], r["b"])
-        for r in ktruss_edges(edges, k=3, rounds=2).collect()
+        for r in ktruss(edges, k=3, rounds=2).collect()
     }
     assert out3 == set(k4) | {(4, 5), (5, 6), (4, 6)}
 
 
 def test_ktruss_cascade(spark):
-    from graphragpart1datapipeline_spark.graph.triangles import ktruss_edges
+    from graphragpart1datapipeline_spark.graph.truss import ktruss
 
     # two triangles sharing edge (1,2): 0-1-2 and 1-2-3, plus triangle
     # 3-4-5 hanging off. For k=4 (support >= 2) only (1,2) has support
@@ -453,7 +446,7 @@ def test_ktruss_cascade(spark):
         [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (3, 4), (3, 5), (4, 5)],
         "src long, dst long",
     )
-    assert ktruss_edges(edges, k=4, rounds=2).count() == 0
+    assert ktruss(edges, k=4, rounds=2).count() == 0
 
 
 # ----------------------------------------------------- incremental CDC
@@ -771,7 +764,7 @@ def test_incremental_corpus_resolves_versions_through_fs(spark, tmp_path):
 
 
 def test_ktruss_until_fixed_point(spark):
-    from graphragpart1datapipeline_spark.graph.triangles import ktruss_edges
+    from graphragpart1datapipeline_spark.graph.truss import ktruss
 
     # chain of triangles sharing single edges: fixed point at k=4 is
     # empty, but it takes >2 rounds to drain
@@ -779,7 +772,7 @@ def test_ktruss_until_fixed_point(spark):
         [(0, 1), (1, 2), (0, 2), (2, 3), (1, 3), (3, 4), (2, 4)],
         "src long, dst long",
     )
-    out = ktruss_edges(edges, k=4, until_fixed_point=True)
+    out = ktruss(edges, k=4, rounds=None)
     assert out.count() == 0
 
 

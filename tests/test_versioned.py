@@ -1,6 +1,7 @@
 """``sources.versioned``: the one versioned-table store.
 
-Re-seeding a used state directory serves the new seed, a stream over
+Re-seeding a used state directory serves the new seed (and nothing an
+earlier seed built that the new one did not), a stream over
 an uninitialised state directory fails before it starts, and a source
 guard keeps the ``v{N}`` + ``_COMMITTED`` layout inside the store.
 """
@@ -59,6 +60,45 @@ def test_reseeding_a_root_serves_the_new_seed(spark, tmp_path):
     idx = read_indexes(spark, root)
     assert _doc_ids(idx["lsh"]) == [9]
     assert _doc_ids(idx["emb"]) == [9]
+
+
+def test_reseeding_maintenance_drops_unbuilt_optional_artifacts(spark, tmp_path):
+    """A re-seed without ``pq_m`` / ``nb_label_col`` must not leave the
+    earlier seed's PQ index or NB classifier behind: their presence is
+    what tells reads and the loop to serve and fold them."""
+    from graphragpart1datapipeline_spark.streaming.maintenance import (
+        init_maintenance_state,
+        read_maintenance_state,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta", "en"), (2, "beta gamma", "de")],
+        "doc_id long, text string, lang string",
+    )
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+        "cid long, embedding array<double>",
+    )
+    work = str(tmp_path / "maint")
+    init_maintenance_state(
+        docs, emb, cents, work, pq_m=2, pq_ksub=2, nb_label_col="lang"
+    )
+    state = read_maintenance_state(spark, work)
+    assert "pq" in state and "nb" in state
+    init_maintenance_state(
+        docs.filter("doc_id = 1").select("doc_id", "text"),
+        emb.filter("vec_id = 1"),
+        cents,
+        work,
+    )
+    state = read_maintenance_state(spark, work)
+    assert "pq" not in state and "nb" not in state
+    assert _doc_ids(state["docs"]) == [1]
+    assert not os.path.exists(os.path.join(work, "pq_codebook"))
 
 
 def test_stream_cdc_apply_requires_init(spark, tmp_path):
