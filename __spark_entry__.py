@@ -5956,7 +5956,7 @@ _BM25_TERMS = ("spark", "merge", "window")
 
 def _bm25_sql(k: int, terms=_BM25_TERMS, where: str = "") -> str:
     """BM25 rational-idf oracle (k1=1.2, b=0.75): parenthesization
-    mirrors bm25_topk's column expression term by term so every IEEE
+    mirrors bm25_query's column expression term by term so every IEEE
     op sequence is identical; per-doc sums decimal-accumulate.
     ``where``: optional corpus filter (q215's post-delete replay)."""
     inlist = ", ".join(f"'{t}'" for t in sorted(set(terms)))

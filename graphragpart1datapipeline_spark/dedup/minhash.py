@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .ngram import word_shingles
+from .ngram import shingle_jaccard, word_shingles
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1 (prime): permutation modulus
 
@@ -272,10 +272,8 @@ def minhash_lsh_incremental(
     texts_b = new_df if corpus_df is None else corpus_df
     j = cand.join(new_df.select(F.col(id_col).alias("a"), F.col(text_col).alias("ta")), "a")
     j = j.join(texts_b.select(F.col(id_col).alias("b"), F.col(text_col).alias("tb")), "b")
-    sh_a, sh_b = shingles("ta", shingle_n), shingles("tb", shingle_n)
-    union = F.size(F.array_union(sh_a, sh_b)).cast("double")
-    jac = F.size(F.array_intersect(sh_a, sh_b)).cast("double") / union
-    verified = j.select("a", "b", F.when(union > 0, jac).otherwise(0.0).alias("jaccard"))
+    jac = shingle_jaccard(shingles("ta", shingle_n), shingles("tb", shingle_n))
+    verified = j.select("a", "b", jac.alias("jaccard"))
     if jaccard_threshold is not None:
         verified = verified.filter(F.col("jaccard") >= jaccard_threshold)
     return verified.select(

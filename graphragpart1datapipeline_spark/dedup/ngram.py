@@ -29,6 +29,14 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     )
 
 
+def shingle_jaccard(sh_a: Column | str, sh_b: Column | str) -> Column:
+    """Exact Jaccard |a ∩ b| / |a ∪ b| of two shingle arrays; 0.0 when
+    both are empty."""
+    inter = F.size(F.array_intersect(sh_a, sh_b)).cast("double")
+    union = F.size(F.array_union(sh_a, sh_b)).cast("double")
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
 def ngram_jaccard_on_pairs(
     pairs: DataFrame,
     docs: DataFrame,
@@ -57,13 +65,7 @@ def ngram_jaccard_on_pairs(
         pairs.join(sh.withColumnRenamed(id_col, "a").withColumnRenamed("__sh", "sh_a"), "a")
         .join(sh.withColumnRenamed(id_col, "b").withColumnRenamed("__sh", "sh_b"), "b")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return j.select(
-        "a",
-        "b",
-        F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
-    )
+    return j.select("a", "b", shingle_jaccard("sh_a", "sh_b").alias("jaccard"))
 
 
 def ngram_jaccard_pairs(
@@ -80,16 +82,9 @@ def ngram_jaccard_pairs(
     a = sh.select(F.col(id_col).alias("a"), F.col("__sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("b"), F.col("__sh").alias("sh_b"))
     pairs = a.crossJoin(b).filter(F.col("a") < F.col("b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        pairs.select(
-            "a",
-            "b",
-            F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return pairs.select(
+        "a", "b", shingle_jaccard("sh_a", "sh_b").alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def decontaminate(

@@ -1,16 +1,14 @@
-"""Incremental BM25 inverted index: build once, upsert increments,
-query without ever re-tokenizing the corpus.
+"""BM25 inverted index: build once, upsert increments, query without
+ever re-tokenizing the corpus. This is the package's one BM25 scorer:
+:func:`bm25_topk` (analysis.py) is :func:`bm25_query` over a throwaway
+:func:`bm25_index` of its input, so a one-shot query and a query served
+from a persisted, upserted index are bit-identical by construction.
 
-:func:`bm25_topk` (analysis.py) re-derives postings, document lengths
-and document frequencies from the raw text on EVERY call — right for a
-one-off query, wrong for a serving tier or a daily-crawl corpus where
-documents arrive in increments. This module is the retrieval twin of
-``dedup/incremental.py``'s persisted-index pattern (round-4 verdict
-task 5): the index is a dict of plain DataFrames (persist them as
-parquet — postings partitioned/bucketed by ``term`` so a query's
-term filter prunes at scan time), and the structural contract makes
-corpus re-work impossible: :func:`bm25_upsert` and :func:`bm25_query`
-never receive the corpus documents at all, only the index tables.
+The index follows ``dedup/incremental.py``'s persisted-index pattern:
+it is a dict of plain DataFrames (persist them as parquet — postings
+partitioned/bucketed by ``term`` so a query's term filter prunes at
+scan time), and :func:`bm25_upsert` and :func:`bm25_query` never
+receive the corpus documents at all, only the index tables.
 
 Index tables:
   ``postings`` (rid, term, tf)  — full inverted index, term-prunable
@@ -19,6 +17,11 @@ Index tables:
   ``params``   1-row            — tokenizer version stamp (the postings
                                   are only consistent for one scheme)
 
+Ids must be unique and non-NULL: a NULL id fails the tokenize pass,
+and a duplicated id that matches a query term fails the query (its
+``dl`` rows would fan out the postings join), each with an error that
+names the id column.
+
 Upsert semantics are true UPSERT: an incoming rid replaces its old
 rows (the delete side is an anti-join against the increment-sized,
 broadcastable rid set), and ``dfreq`` is updated for TOUCHED TERMS
@@ -26,12 +29,6 @@ ONLY (±1 delta rows unioned onto the old table and re-summed per term
 — vocabulary-sized work, never a full postings regroup; expressed as
 union + groupBy rather than an outer join so a serving-side term
 filter pushes through to every branch).
-
-Exactness: :func:`bm25_query` reproduces :func:`bm25_topk`'s IEEE op
-sequence term by term (same rational idf, same decimal-accumulated
-per-doc sum), so index-then-query equals rebuild bit-for-bit — q179
-locks split-apply == one-shot against the same DuckDB oracle that
-already proves q103.
 """
 
 from __future__ import annotations
@@ -50,13 +47,29 @@ __all__ = ["bm25_index", "bm25_upsert", "bm25_delete", "bm25_query"]
 
 
 def _index_parts(df: DataFrame, text_col: str, id_col: str):
+    # NULL-id guard: a NULL rid would count toward n_docs and avgdl but
+    # drop out of the rid join, silently losing the document. The
+    # isNotNull filter keeps every row (a NULL rid has raised by then);
+    # it puts the guard on every branch that reads this table, so the
+    # branches' scans of one corpus match and Spark can reuse their
+    # exchange instead of re-reading the text.
+    rid = F.when(
+        F.col(id_col).isNull(),
+        F.raise_error(F.lit(f"bm25_index: NULL value in id column {id_col!r}")),
+    ).otherwise(F.col(id_col))
     toks = df.select(
-        F.col(id_col).alias("rid"), tokens(text_col).alias("__toks")
-    )
+        rid.alias("rid"), tokens(text_col).alias("__toks")
+    ).filter(F.col("rid").isNotNull())
     dl = toks.select("rid", F.size("__toks").alias("dl"))
+    # explode_outer: a plain explode makes Catalyst infer a
+    # size(split(text)) > 0 filter and push it below the input's
+    # repartition, where it tokenizes at scan parallelism (and the
+    # tokenize scans stop matching dl's); the NULL rows it emits for
+    # NULL text are dropped right after, as explode drops them
     tf = (
-        toks.select("rid", F.explode("__toks").alias("__t"))
+        toks.select("rid", F.explode_outer("__toks").alias("__t"))
         .select("rid", F.lower("__t").alias("term"))
+        .filter(F.col("term").isNotNull())
         .groupBy("rid", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -71,7 +84,11 @@ def bm25_index(
     the tables (postings partitioned/bucketed by term) and hand the
     dict to :func:`bm25_upsert` / :func:`bm25_query`."""
     dl, tf = _index_parts(df, text_col, id_col)
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    # count_if(tf > 0) == count(1) (tf >= 1), but it reads tf, so the
+    # (rid, term) aggregate keeps its count and a query over a fresh
+    # index reuses the postings exchange for dfreq instead of
+    # exploding the corpus a second time
+    dfreq = tf.groupBy("term").agg(F.count_if(F.col("tf") > 0).alias("df"))
     params = local_frame(
         df.sparkSession, [(_TOKENIZER_VERSION,)], "tokenizer_version long"
     )
@@ -201,12 +218,14 @@ def bm25_query(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """BM25 top-k served FROM THE INDEX: postings filtered to the query
-    terms (partition-prunable at rest), dfreq filtered term-sized and
-    broadcast, corpus stats one map-side agg over ``dl`` — the raw text
-    never in the plan. Output schema and every IEEE op match
-    :func:`bm25_topk` exactly (same rational idf, same
-    decimal-accumulated per-doc sum, same (score desc, id) tie-break),
-    so serving from the index is bit-identical to the one-shot path."""
+    terms (partition-prunable at rest, and below the first shuffle when
+    the index is a fresh :func:`bm25_index`), dfreq filtered term-sized
+    and broadcast, corpus stats one map-side agg over ``dl`` — the raw
+    text never in the plan. Per-doc scores are summed as exact
+    decimal(38,12) over one row per matched term, so term order cannot
+    change a score; ties rank by id. A rid with more ``dl`` rows than
+    one (a duplicated id) raises instead of scoring a fanned-out join.
+    """
     from pyspark.sql import Window
 
     if not terms:
@@ -234,14 +253,27 @@ def bm25_query(
         F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("dl") / avgdl)
     )
     term_score = idf * (F.col("tf") * F.lit(k1 + 1.0)) / denom
+    # postings are unique per (rid, term), so more joined rows than
+    # distinct terms means the rid has several dl rows (a duplicated id)
+    n_rows = F.count(F.lit(1))
+    unique_rid = n_rows == F.count_distinct("term")
+    dup_error = F.raise_error(
+        F.concat(
+            F.lit(f"bm25_query: duplicate value in id column {id_col!r}: "),
+            F.col("rid").cast("string"),
+        )
+    )
     per_doc = (
         scored.withColumn("__s", term_score)
         .groupBy("rid")
         .agg(
-            F.sum(F.col("__s").cast("decimal(38,12)"))
-            .cast("double")
+            F.when(
+                unique_rid,
+                F.sum(F.col("__s").cast("decimal(38,12)")).cast("double"),
+            )
+            .otherwise(dup_error)
             .alias("score"),
-            F.count(F.lit(1)).alias("matched_terms"),
+            n_rows.alias("matched_terms"),
         )
         .withColumnRenamed("rid", id_col)
     )

@@ -30,7 +30,6 @@ Design for determinism AND scale:
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -218,57 +217,3 @@ def _lloyd(spark, corpus, vec_col, id_col, k, iters, seed, scale):
     )
     return cents, final
 
-
-def kmeans_fit_reference(
-    vectors: dict[int, Sequence[float]],
-    k: int = 4,
-    iters: int = 2,
-    seed: str | int = 42,
-    scale: int = 1_000_000,
-) -> dict[int, int]:
-    """Driver-side replay of :func:`kmeans_fit` (hashlib + plain
-    floats) for property tests — same init, same argmax rule, same
-    scaled-integer means."""
-    import hashlib
-
-    def md5(s: str) -> str:
-        return hashlib.md5(s.encode()).hexdigest()
-
-    order = sorted(vectors, key=lambda i: (md5(f"{seed}:{i}"), i))
-    cents = {
-        cid: [float(x) for x in vectors[i]] for cid, i in enumerate(order[:k])
-    }
-
-    def cos(a: Sequence[float], b: Sequence[float]) -> float:
-        dot = 0.0
-        for x, y in zip(a, b):
-            dot += float(x) * float(y)
-        na = 0.0
-        for x in a:
-            na += float(x) * float(x)
-        nb = 0.0
-        for y in b:
-            nb += float(y) * float(y)
-        denom = math.sqrt(na) * math.sqrt(nb)
-        return dot / denom if denom > 0 else 0.0
-
-    def assign() -> dict[int, int]:
-        out = {}
-        for i, v in vectors.items():
-            out[i] = min(cents, key=lambda c: (-cos(v, cents[c]), c))
-        return out
-
-    for _ in range(iters):
-        a = assign()
-        sums: dict[int, list[int]] = {}
-        ns: dict[int, int] = {}
-        for i, cid in a.items():
-            v = vectors[i]
-            acc = sums.setdefault(cid, [0] * len(v))
-            ns[cid] = ns.get(cid, 0) + 1
-            for d, x in enumerate(v):
-                acc[d] += int(math.floor(float(x) * scale + 0.5))
-        for cid in cents:
-            if cid in sums:
-                cents[cid] = [s / (ns[cid] * scale) for s in sums[cid]]
-    return assign()

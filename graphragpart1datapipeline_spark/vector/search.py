@@ -1140,23 +1140,6 @@ def knn_join_blocked(
     )
 
 
-def recall_at_k(
-    exact: DataFrame,
-    approx: DataFrame,
-    id_col: str = "vec_id",
-) -> float:
-    """Recall@k of an approximate ANN result against the exact top-k:
-    |approx ∩ exact| / |exact| over the id column. Evaluation utility
-    for tuning the bits/nprobe recall-vs-cost trade (both inputs are
-    top-k frames — driver-sized by construction, so the intersect is
-    cheap)."""
-    e = {r[id_col] for r in exact.select(id_col).collect()}
-    if not e:
-        return 1.0
-    a = {r[id_col] for r in approx.select(id_col).collect()}
-    return len(e & a) / len(e)
-
-
 def rrf_fuse(
     ranked: Sequence[DataFrame],
     id_col: str = "id",

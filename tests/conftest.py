@@ -107,7 +107,6 @@ SLOW_TESTS = frozenset({
     "test_properties.py::test_set_similarity_incremental_matches_bruteforce",
     "test_properties.py::test_stitch_context_exact_reconstruction_property",
     "test_properties.py::test_triangle_counts_matches_bruteforce",
-    "test_round10b_ops.py::test_crawl_pipeline_composes",
     "test_round10b_ops.py::test_unigram_encode_matches_training_segmentation",
     "test_round3_ops.py::test_detect_hot_keys_exact_fraction_and_composite",
     "test_round3_ops.py::test_incremental_corpus_flags_near_dups",

@@ -598,6 +598,36 @@ def test_bm25_query_plan_never_tokenizes_corpus(spark, tmp_path):
     assert up_plan.count("split(trim") == up_plan.count("split(trim(text")
 
 
+def test_bm25_topk_filters_terms_before_first_exchange(spark, sf_dir):
+    """The one-shot BM25 path (q103) filters postings to the
+    query terms before they shuffle: walking up from every tokenizer
+    explode, the term IN filter comes before the first Exchange. And
+    dfreq reuses the postings (rid, term) exchange instead of
+    exploding the corpus a second time."""
+    df = em.queries()["q103_bm25_topk"](spark, sf_dir)
+    df.collect()
+    lines = _plan(df).split("== Initial Plan ==")[0].splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    explodes = [i for i, ln in enumerate(lines) if "Generate explode" in ln]
+    assert explodes
+    for i in explodes:
+        d, filtered = depth(lines[i]), False
+        for ln in reversed(lines[:i]):
+            if depth(ln) >= d:
+                continue
+            d = depth(ln)
+            if "Exchange" in ln:
+                break
+            filtered |= "IN (merge,spark,window)" in ln
+        assert filtered, lines[i]
+    assert any(
+        "ReusedExchange" in ln and "hashpartitioning(rid" in ln for ln in lines
+    )
+
+
 def test_plan_audit_invariants_sample(spark):
     """plan_audit.py's two invariants — no cartesian outside the
     documented exact-oracle twins, no row-at-a-time Python anywhere —

@@ -447,57 +447,6 @@ def test_lang_script_mismatch_rules(spark):
         expected_script(F.col("lang"), {"en": "klingon"})
 
 
-# ---------------------------------------------------- crawl demo plan
-
-def test_crawl_pipeline_composes(spark, sf_dir):
-    """The composed crawl DAG: funnel monotone through every gate,
-    per-domain cap and gap invariants hold, parse preserves rows, and
-    a re-run reproduces the identical timetable."""
-    from graphragpart1datapipeline_spark.plans.crawl_demo import (
-        build_crawl_pipeline,
-    )
-
-    out = build_crawl_pipeline(sf_dir, domain_cap_n=20).run(spark)
-    n_docs = out["documents"].count()
-    n_front = out["frontier"].count()
-    assert n_front == n_docs
-    unseen_ids = {r["doc_id"] for r in out["unseen"].collect()}
-    assert unseen_ids and all(i % 2 == 1 for i in unseen_ids)
-    allowed_ids = {r["doc_id"] for r in out["allowed"].collect()}
-    assert allowed_ids < unseen_ids
-    # graftbot's exact group disallows /Path{(d+1)%5}/doc on site{d}
-    assert all((i % 5) != ((i % 7) + 1) % 5 for i in allowed_ids)
-    assert any((i % 5) == (i % 7) % 5 for i in allowed_ids), (
-        "the * group's Disallow must NOT apply to graftbot"
-    )
-    capped = out["capped"]
-    per_dom = capped.groupBy(F.expr("doc_id % 7")).count().collect()
-    assert all(r["count"] <= 20 for r in per_dom)
-    sched = out["scheduled"]
-    assert sched.count() == capped.count()
-    by_dom: dict[str, list[int]] = {}
-    for r in sched.collect():
-        by_dom.setdefault(r["domain"], []).append(r["fetch_at_ms"])
-    for times in by_dom.values():
-        times.sort()
-        assert all(
-            b - a == 16 * 250 for a, b in zip(times, times[1:])
-        )
-    assert out["records"].count() == sched.count()
-    curated = out["curated"]
-    rows = curated.collect()
-    assert rows and all(r["route"] == "text/html" for r in rows)
-    assert all("<" not in r["text"].split(">")[0] for r in rows[:5])
-    # determinism: identical timetable on a re-run
-    again = build_crawl_pipeline(sf_dir, domain_cap_n=20).run(spark)
-    t1 = {(r["doc_id"], r["fetch_at_ms"]) for r in sched.collect()}
-    t2 = {
-        (r["doc_id"], r["fetch_at_ms"])
-        for r in again["scheduled"].collect()
-    }
-    assert t1 == t2
-
-
 # --------------------------------------------------- redirects
 
 def test_resolve_redirects_chain_loop_and_guard(spark):

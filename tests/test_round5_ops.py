@@ -22,7 +22,6 @@ def test_bm25_upsert_equals_rebuild_and_roundtrip(spark, tmp_path):
         bm25_query,
         bm25_upsert,
     )
-    from graphragpart1datapipeline_spark.text.analysis import bm25_topk
 
     rows = [
         (i, f"spark merge {'window ' * (i % 3)}token{i} alpha beta")
@@ -44,8 +43,9 @@ def test_bm25_upsert_equals_rebuild_and_roundtrip(spark, tmp_path):
     got = bm25_query(
         ix2, ["spark", "merge", "window"], k=10, log_idf=False
     ).collect()
-    want = bm25_topk(
-        all_docs, ["spark", "merge", "window"], k=10, log_idf=False
+    want = bm25_query(
+        bm25_index(all_docs), ["spark", "merge", "window"], k=10,
+        log_idf=False,
     ).collect()
     assert [r.asDict() for r in got] == [r.asDict() for r in want]
 
@@ -96,6 +96,34 @@ def test_bm25_version_guard(spark):
     ix["params"] = spark.createDataFrame([(99,)], "tokenizer_version long")
     with pytest.raises(ValueError, match="tokenizer_version"):
         bm25_query(ix, ["a"])
+
+
+@pytest.mark.parametrize(
+    "rows,k,error",
+    [
+        # a duplicated id fanned out the postings ⋈ dl join
+        # (matched_terms 4 for 2 query terms)
+        ([(1, "a b"), (1, "a"), (3, "c")], 10, "duplicate value"),
+        # ... and fails even when it ranks below the top k
+        ([(1, "a a a b b"), (2, "c d e f a"), (2, "zz"), (3, "q")], 1,
+         "duplicate value"),
+        # a NULL id counted toward n_docs/avgdl, then dropped silently
+        ([(None, "a a"), (2, "a b"), (3, "c")], 10, "NULL value"),
+        ([(None, "c"), (2, "a b"), (3, "c")], 10, "NULL value"),
+    ],
+)
+def test_bm25_bad_ids_raise(spark, rows, k, error):
+    """BM25 ids must be unique and non-NULL; a violation fails loudly
+    with the id column named instead of returning wrong rows."""
+    from pyspark.errors import SparkRuntimeException
+
+    from graphragpart1datapipeline_spark.text.analysis import bm25_topk
+
+    df = _docs(spark, rows)
+    with pytest.raises(
+        SparkRuntimeException, match=f"{error} in id column 'doc_id'"
+    ):
+        bm25_topk(df, ["a", "b"], k=k, log_idf=False).collect()
 
 
 def _emb(spark, ids, dim=8, shift=0.0):

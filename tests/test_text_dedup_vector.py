@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 
 from pyspark.sql import functions as F
 
@@ -523,13 +524,25 @@ def test_remove_boilerplate_spans_metachar_separator(spark):
     assert out[3] == "unique abc"
 
 
+def recall_at_k(exact, approx, id_col: str = "vec_id") -> float:
+    """Recall@k of an approximate ANN result against the exact top-k:
+    |approx ∩ exact| / |exact| over the id column. Evaluation utility
+    for tuning the bits/nprobe recall-vs-cost trade (both inputs are
+    top-k frames — driver-sized by construction, so the intersect is
+    cheap)."""
+    e = {r[id_col] for r in exact.select(id_col).collect()}
+    if not e:
+        return 1.0
+    a = {r[id_col] for r in approx.select(id_col).collect()}
+    return len(e & a) / len(e)
+
+
 def test_ann_recall_at_k(spark):
     from graphragpart1datapipeline_spark.sources import read_table
     from graphragpart1datapipeline_spark.vector.search import (
         cosine_topk,
         ivf_topk,
         lsh_topk,
-        recall_at_k,
     )
 
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -551,11 +564,62 @@ def test_ann_recall_at_k(spark):
     assert recall_at_k(exact, ivf_all) == 1.0
 
 
+def kmeans_fit_reference(
+    vectors: dict[int, Sequence[float]],
+    k: int = 4,
+    iters: int = 2,
+    seed: str | int = 42,
+    scale: int = 1_000_000,
+) -> dict[int, int]:
+    """Driver-side replay of ``kmeans_fit`` (hashlib + plain floats) —
+    same init, same argmax rule, same scaled-integer means."""
+    import hashlib
+
+    def md5(s: str) -> str:
+        return hashlib.md5(s.encode()).hexdigest()
+
+    order = sorted(vectors, key=lambda i: (md5(f"{seed}:{i}"), i))
+    cents = {
+        cid: [float(x) for x in vectors[i]] for cid, i in enumerate(order[:k])
+    }
+
+    def cos(a: Sequence[float], b: Sequence[float]) -> float:
+        dot = 0.0
+        for x, y in zip(a, b):
+            dot += float(x) * float(y)
+        na = 0.0
+        for x in a:
+            na += float(x) * float(x)
+        nb = 0.0
+        for y in b:
+            nb += float(y) * float(y)
+        denom = math.sqrt(na) * math.sqrt(nb)
+        return dot / denom if denom > 0 else 0.0
+
+    def assign() -> dict[int, int]:
+        out = {}
+        for i, v in vectors.items():
+            out[i] = min(cents, key=lambda c: (-cos(v, cents[c]), c))
+        return out
+
+    for _ in range(iters):
+        a = assign()
+        sums: dict[int, list[int]] = {}
+        ns: dict[int, int] = {}
+        for i, cid in a.items():
+            v = vectors[i]
+            acc = sums.setdefault(cid, [0] * len(v))
+            ns[cid] = ns.get(cid, 0) + 1
+            for d, x in enumerate(v):
+                acc[d] += int(math.floor(float(x) * scale + 0.5))
+        for cid in cents:
+            if cid in sums:
+                cents[cid] = [s / (ns[cid] * scale) for s in sums[cid]]
+    return assign()
+
+
 def test_kmeans_fit_matches_driver_replay(spark):
-    from graphragpart1datapipeline_spark.vector.kmeans import (
-        kmeans_fit,
-        kmeans_fit_reference,
-    )
+    from graphragpart1datapipeline_spark.vector.kmeans import kmeans_fit
 
     # 3 well-separated direction clusters + noise dims
     base = {0: [1.0, 0.0, 0.0], 1: [0.0, 1.0, 0.0], 2: [0.0, 0.0, 1.0]}
