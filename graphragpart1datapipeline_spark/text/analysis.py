@@ -267,6 +267,31 @@ def tfidf_top_terms(
     )
 
 
+def bm25_term_score(
+    tf: Column,
+    df: Column,
+    dl: Column,
+    n_docs: Column,
+    sum_dl: Column,
+    k1: float,
+    b: float,
+    log_idf: bool,
+) -> Column:
+    """One query term's BM25 contribution to one document: the package's
+    one BM25 scoring expression, shared by :func:`bm25_topk` (wide, one
+    column per query term) and :func:`~.bm25_index.bm25_query` (one row
+    per matched term). With ``log_idf=False`` every op is an
+    exactly-rounded IEEE op, so the same inputs give the same bits in
+    both plans and in the DuckDB oracle."""
+    avgdl = sum_dl.cast("double") / n_docs
+    rational = (n_docs - df + F.lit(0.5)) / (df + F.lit(0.5))
+    idf = F.log(F.lit(1.0) + rational) if log_idf else rational
+    denom = tf + F.lit(k1) * (
+        F.lit(1.0) - F.lit(b) + F.lit(b) * (dl / avgdl)
+    )
+    return idf * (tf * F.lit(k1 + 1.0)) / denom
+
+
 def bm25_topk(
     df,
     terms: list[str],
@@ -281,12 +306,19 @@ def bm25_topk(
     the ranked upgrade of :func:`fulltext_search`'s boolean match —
     reference: Neo4j fulltext index scoring, README.md:414-418).
 
-    A one-shot query is :func:`~.bm25_index.bm25_query` over a
-    throwaway :func:`~.bm25_index.bm25_index` of ``df``, so there is
-    one BM25 scorer and serving from a persisted index is bit-identical
-    to this call by construction. ``id_col`` must be unique and
-    non-NULL: a NULL id or a duplicated id that matches a query term
-    raises an error naming the column (see ``bm25_query``).
+    Plan: per-term tf is a row-local array count (|terms| is
+    query-sized), so there is no postings shuffle and no tf ⋈ dl join.
+    ONE map-side-combined agg produces (n_docs, sum_dl, df_1..df_T) as
+    a 1-row broadcast, then ONE scoring scan ends in
+    TakeOrderedAndProject (only k rows reach a single task). Zero
+    corpus-sized exchanges at any scale.
+
+    Serving from a persisted, upserted index is
+    :func:`~.bm25_index.bm25_query`. Both score with
+    :func:`bm25_term_score` and sum exactly in decimal, so on a corpus
+    with unique, non-NULL ids they return the same rows. Here every
+    input row is a document: a duplicated id ranks each of its rows
+    (``bm25_query`` raises instead).
 
     ``log_idf=False`` uses the rational idf (N - df + 0.5)/(df + 0.5)
     without the logarithm — all exactly-rounded IEEE ops, bit-identical
@@ -295,13 +327,87 @@ def bm25_topk(
     ln(1 + rational) is standard BM25+ (libm ln may differ in the last
     ulp across engines). Ties rank deterministically by id.
     """
-    # imported here: bm25_index.py imports `tokens` from this module
-    from .bm25_index import bm25_index, bm25_query
+    from pyspark.sql import Window
 
-    return bm25_query(
-        bm25_index(df, text_col, id_col), terms, k=k, k1=k1, b=b,
-        log_idf=log_idf, id_col=id_col,
+    qterms = sorted({t.lower() for t in terms})
+    if not qterms:
+        raise ValueError("bm25_topk: need at least one query term")
+    # the balanced pairwise decimal reduction widens precision by 1 per
+    # add level: 25 + ceil(log2(T)) must stay <= 38, i.e. T <= 8192 —
+    # beyond that Spark (allowPrecisionLoss=true) would silently drop
+    # scale and break the exact-sum contract, so refuse loudly
+    if len(qterms) > 8192:
+        raise ValueError(
+            f"bm25_topk: {len(qterms)} distinct query terms exceeds the "
+            "8192 bound of the exact decimal(25,12) pairwise summation "
+            "(25 + log2(T) decimal digits must stay <= 38)"
+        )
+    toks = tokens(text_col)
+    def _tf(term: str):
+        # one-arg lambda: F.filter treats two-arg lambdas as (x, i)
+        return F.size(F.filter(toks, lambda t: F.lower(t) == F.lit(term)))
+
+    def _has(term: str):
+        return F.exists(toks, lambda t: F.lower(t) == F.lit(term))
+
+    tf_cols = [_tf(q).alias(f"__tf_{i}") for i, q in enumerate(qterms)]
+    # stats pass: dl needs no lowering, df_i only needs EXISTS — the
+    # cheapest possible full-corpus pass
+    stats = df.select(
+        F.size(toks).alias("dl"),
+        *[_has(q).cast("long").alias(f"__h_{i}") for i, q in enumerate(qterms)],
+    ).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("dl").alias("sum_dl"),
+        *[
+            F.sum(f"__h_{i}").alias(f"__df_{i}")
+            for i in range(len(qterms))
+        ],
     )
+    per_doc = df.select(F.col(id_col), F.size(toks).alias("dl"), *tf_cols)
+    scored = per_doc.crossJoin(F.broadcast(stats))
+    # contributions are cast to decimal(25,12) (scale 12 — the same
+    # rounding as the old cast to decimal(38,12)) and added PAIRWISE
+    # (balanced tree): Spark widens decimal precision by 1 per ADD
+    # LEVEL, so the tree keeps precision at 25+ceil(log2(T)) ≤ 38 up to
+    # T=8192 terms (guarded above) where a left fold would overflow
+    # precision at T=14 and silently drop scale to 11. Exact decimal
+    # adds in any grouping equal the old groupBy SUM bit-for-bit.
+    zero_dec = F.lit(0).cast("decimal(25,12)")
+    contribs = []
+    hits = []
+    for i in range(len(qterms)):
+        tf_c = F.col(f"__tf_{i}")
+        df_c = F.col(f"__df_{i}")
+        term_score = bm25_term_score(
+            tf_c, df_c, F.col("dl"), F.col("n_docs"), F.col("sum_dl"),
+            k1, b, log_idf,
+        )
+        contribs.append(
+            F.when(tf_c > 0, term_score.cast("decimal(25,12)")).otherwise(
+                zero_dec
+            )
+        )
+        hits.append(F.when(tf_c > 0, F.lit(1)).otherwise(F.lit(0)))
+    while len(contribs) > 1:  # balanced pairwise reduction
+        contribs = [
+            contribs[j] + contribs[j + 1]
+            if j + 1 < len(contribs)
+            else contribs[j]
+            for j in range(0, len(contribs), 2)
+        ]
+    score_dec = contribs[0]
+    matched = hits[0]
+    for h in hits[1:]:
+        matched = matched + h
+    per_doc_scored = scored.select(
+        F.col(id_col),
+        score_dec.cast("double").alias("score"),
+        matched.cast("long").alias("matched_terms"),
+    ).filter(F.col("matched_terms") >= 1)
+    topk = per_doc_scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    w = Window.orderBy(F.desc("score"), F.asc(id_col))
+    return topk.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
 # (pattern, replacement) chain applied in order; kept RE2-compatible so

@@ -1,8 +1,9 @@
 """BM25 inverted index: build once, upsert increments, query without
-ever re-tokenizing the corpus. This is the package's one BM25 scorer:
-:func:`bm25_topk` (analysis.py) is :func:`bm25_query` over a throwaway
-:func:`bm25_index` of its input, so a one-shot query and a query served
-from a persisted, upserted index are bit-identical by construction.
+ever re-tokenizing the corpus. :func:`bm25_query` and the one-shot
+:func:`~.analysis.bm25_topk` score with one expression,
+:func:`~.analysis.bm25_term_score`, and the same exact decimal per-doc
+sum, so a query served from a persisted, upserted index returns the
+rows the one-shot call returns on the same corpus.
 
 The index follows ``dedup/incremental.py``'s persisted-index pattern:
 it is a dict of plain DataFrames (persist them as parquet — postings
@@ -37,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..util import local_frame
-from .analysis import tokens
+from .analysis import bm25_term_score, tokens
 
 # bump if the tokenizer scheme ever changes — a persisted index built
 # under another scheme must refuse to compose with this code
@@ -50,9 +51,9 @@ def _index_parts(df: DataFrame, text_col: str, id_col: str):
     # NULL-id guard: a NULL rid would count toward n_docs and avgdl but
     # drop out of the rid join, silently losing the document. The
     # isNotNull filter keeps every row (a NULL rid has raised by then);
-    # it puts the guard on every branch that reads this table, so the
-    # branches' scans of one corpus match and Spark can reuse their
-    # exchange instead of re-reading the text.
+    # it puts on every branch the isnotnull(rid) that bm25_query's rid
+    # join would otherwise infer on the postings branch only, so the
+    # dfreq branch still matches it and reuses the postings exchange.
     rid = F.when(
         F.col(id_col).isNull(),
         F.raise_error(F.lit(f"bm25_index: NULL value in id column {id_col!r}")),
@@ -61,15 +62,17 @@ def _index_parts(df: DataFrame, text_col: str, id_col: str):
         rid.alias("rid"), tokens(text_col).alias("__toks")
     ).filter(F.col("rid").isNotNull())
     dl = toks.select("rid", F.size("__toks").alias("dl"))
-    # explode_outer: a plain explode makes Catalyst infer a
-    # size(split(text)) > 0 filter and push it below the input's
-    # repartition, where it tokenizes at scan parallelism (and the
-    # tokenize scans stop matching dl's); the NULL rows it emits for
-    # NULL text are dropped right after, as explode drops them
+    # the exploded (rid, term) rows are clustered by rid before the tf
+    # count, so bm25_query's per-rid sum over a fresh index runs in the
+    # same stage, and dfreq reuses this exchange instead of exploding
+    # the corpus again. Lowering inside the explode leaves Catalyst no
+    # token-array attribute to infer a size() > 0 filter on, so nothing
+    # tokenizes below the input's repartition.
     tf = (
-        toks.select("rid", F.explode_outer("__toks").alias("__t"))
-        .select("rid", F.lower("__t").alias("term"))
-        .filter(F.col("term").isNotNull())
+        toks.select(
+            "rid", F.explode(F.transform("__toks", F.lower)).alias("term")
+        )
+        .repartition("rid")
         .groupBy("rid", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -80,15 +83,12 @@ def bm25_index(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> dict[str, DataFrame]:
     """Build the index from a corpus snapshot: ONE tokenize pass, one
-    (rid, term) shuffle for tf, one term-sized groupBy for df. Persist
-    the tables (postings partitioned/bucketed by term) and hand the
-    dict to :func:`bm25_upsert` / :func:`bm25_query`."""
+    rid-keyed shuffle of the exploded (rid, term) rows for tf, one
+    term-sized groupBy for df. Persist the tables (postings
+    partitioned/bucketed by term) and hand the dict to
+    :func:`bm25_upsert` / :func:`bm25_query`."""
     dl, tf = _index_parts(df, text_col, id_col)
-    # count_if(tf > 0) == count(1) (tf >= 1), but it reads tf, so the
-    # (rid, term) aggregate keeps its count and a query over a fresh
-    # index reuses the postings exchange for dfreq instead of
-    # exploding the corpus a second time
-    dfreq = tf.groupBy("term").agg(F.count_if(F.col("tf") > 0).alias("df"))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     params = local_frame(
         df.sparkSession, [(_TOKENIZER_VERSION,)], "tokenizer_version long"
     )
@@ -244,15 +244,10 @@ def bm25_query(
         .join(index["dl"], "rid")
         .crossJoin(F.broadcast(stats))
     )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    rational = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (
-        F.col("df") + F.lit(0.5)
+    term_score = bm25_term_score(
+        F.col("tf"), F.col("df"), F.col("dl"), F.col("n_docs"),
+        F.col("sum_dl"), k1, b, log_idf,
     )
-    idf = F.log(F.lit(1.0) + rational) if log_idf else rational
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("dl") / avgdl)
-    )
-    term_score = idf * (F.col("tf") * F.lit(k1 + 1.0)) / denom
     # postings are unique per (rid, term), so more joined rows than
     # distinct terms means the rid has several dl rows (a duplicated id)
     n_rows = F.count(F.lit(1))

@@ -12,6 +12,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
@@ -598,13 +600,32 @@ def test_bm25_query_plan_never_tokenizes_corpus(spark, tmp_path):
     assert up_plan.count("split(trim") == up_plan.count("split(trim(text")
 
 
-def test_bm25_topk_filters_terms_before_first_exchange(spark, sf_dir):
-    """The one-shot BM25 path (q103) filters postings to the
-    query terms before they shuffle: walking up from every tokenizer
-    explode, the term IN filter comes before the first Exchange. And
-    dfreq reuses the postings (rid, term) exchange instead of
-    exploding the corpus a second time."""
-    df = em.queries()["q103_bm25_topk"](spark, sf_dir)
+@pytest.mark.parametrize("path", ["fresh", "upsert"])
+def test_bm25_index_query_filters_terms_before_first_exchange(
+    spark, sf_dir, path
+):
+    """A query over a freshly built (or freshly upserted) BM25 index
+    filters postings to the query terms before they shuffle: walking
+    up from every tokenizer explode, the term IN filter comes before
+    the first Exchange, and the tokenizer never runs as a pushed-down
+    filter. dfreq reuses the rid-keyed postings exchange instead of
+    exploding the text again; over a fresh index the per-rid score sum
+    adds no exchange of its own."""
+    from graphragpart1datapipeline_spark.text import (
+        bm25_index,
+        bm25_query,
+        bm25_upsert,
+    )
+
+    docs = em._t(spark, sf_dir, "documents")
+    if path == "fresh":
+        ix = bm25_index(docs)
+    else:
+        ix = bm25_upsert(
+            bm25_index(docs.filter("doc_id % 3 != 1")),
+            docs.filter("doc_id % 3 = 1"),
+        )
+    df = bm25_query(ix, list(em._BM25_TERMS), k=10, log_idf=False)
     df.collect()
     lines = _plan(df).split("== Initial Plan ==")[0].splitlines()
 
@@ -623,9 +644,17 @@ def test_bm25_topk_filters_terms_before_first_exchange(spark, sf_dir):
                 break
             filtered |= "IN (merge,spark,window)" in ln
         assert filtered, lines[i]
+    assert not any("Filter" in ln and "size(split(" in ln for ln in lines)
     assert any(
         "ReusedExchange" in ln and "hashpartitioning(rid" in ln for ln in lines
     )
+    if path == "fresh":
+        assert len(explodes) == 1
+        assert not any(
+            "Exchange hashpartitioning(rid" in ln
+            and "REPARTITION_BY_COL" not in ln
+            for ln in lines
+        )
 
 
 def test_plan_audit_invariants_sample(spark):

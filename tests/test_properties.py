@@ -1134,13 +1134,15 @@ bm25_corpus = st.lists(
 @SETTINGS
 def test_bm25_upsert_equivalence_property(spark, corpus, k):
     """For ANY corpus and ANY split, index(part1) ∪ upsert(part2)
-    serves bit-identically to a full rebuild index(all) — unicode-ish
-    text, empty docs, and duplicate terms included."""
+    serves bit-identically to a full rebuild index(all) and to the
+    one-shot bm25_topk — unicode-ish text, empty docs, and duplicate
+    terms included."""
     from graphragpart1datapipeline_spark.text import (
         bm25_index,
         bm25_query,
         bm25_upsert,
     )
+    from graphragpart1datapipeline_spark.text.analysis import bm25_topk
 
     all_docs = spark.createDataFrame(corpus, "doc_id long, text string")
     part1 = all_docs.filter(F.col("doc_id") % k != 0)
@@ -1150,7 +1152,9 @@ def test_bm25_upsert_equivalence_property(spark, corpus, k):
     want = bm25_query(
         bm25_index(all_docs), ["a", "x"], k=10, log_idf=False
     ).collect()
+    one_shot = bm25_topk(all_docs, ["a", "x"], k=10, log_idf=False).collect()
     assert [r.asDict() for r in got] == [r.asDict() for r in want]
+    assert [r.asDict() for r in one_shot] == [r.asDict() for r in want]
 
 
 sketch_keys = st.lists(

@@ -113,17 +113,21 @@ def test_bm25_version_guard(spark):
     ],
 )
 def test_bm25_bad_ids_raise(spark, rows, k, error):
-    """BM25 ids must be unique and non-NULL; a violation fails loudly
-    with the id column named instead of returning wrong rows."""
+    """Index ids must be unique and non-NULL; a violation fails loudly
+    with the id column named instead of returning wrong rows. When two
+    concurrent stages both raise, AQE reports them together as one
+    Py4JJavaError that carries the same message."""
+    from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
 
-    from graphragpart1datapipeline_spark.text.analysis import bm25_topk
+    from graphragpart1datapipeline_spark.text import bm25_index, bm25_query
 
-    df = _docs(spark, rows)
+    ix = bm25_index(_docs(spark, rows))
     with pytest.raises(
-        SparkRuntimeException, match=f"{error} in id column 'doc_id'"
+        (SparkRuntimeException, Py4JJavaError),
+        match=f"{error} in id column 'doc_id'",
     ):
-        bm25_topk(df, ["a", "b"], k=k, log_idf=False).collect()
+        bm25_query(ix, ["a", "b"], k=k, log_idf=False).collect()
 
 
 def _emb(spark, ids, dim=8, shift=0.0):
