@@ -27,7 +27,10 @@ Determinism: every stage is exact/replayable — the Lloyd run is
 exact-integer, pair scores are in-order double folds, closure is
 min-id components, and centroid cosines are half-up rounded at 1e-9
 before the argmin (q220 value-replays the full composition against a
-recursive-SQL oracle).
+recursive-SQL oracle). Rows are assigned to centroids by the one
+nearest-centroid kernel (vector/search.py ``_nearest_centroid``, via
+``kmeans_fit`` and ``ivf_assignments``), and ``cent_cos`` is that
+kernel's winning cosine — no second centroid join.
 """
 
 from __future__ import annotations
@@ -131,26 +134,12 @@ def _within_cluster_pairs(
     return out.select("a", "b")
 
 
-def _cent_cos_rows(
-    emb: DataFrame,
-    assign: DataFrame,
-    cents_df: DataFrame,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """(id, centroid_id, cent_cos) — cosine to the assigned centroid,
-    half-up rounded at 1e-9 (zero-norm rows score 0)."""
-    from ..vector.search import cosine_expr
-
-    cd = cents_df.select(F.col("cid"), F.col("embedding").alias("__cv"))
-    cent_cos = F.floor(
-        cosine_expr(F.col(vec_col), F.col("__cv")) * 1e9 + F.lit(0.5)
-    ) / F.lit(1e9)
-    return (
-        emb.join(assign, id_col)
-        .join(F.broadcast(cd), F.col("centroid_id") == F.col("cid"))
-        .select(id_col, "centroid_id", cent_cos.alias("cent_cos"))
-    )
+def _cent_cos(assign: DataFrame, id_col: str) -> DataFrame:
+    """(id, centroid_id, cent_cos) from an (id, centroid_id,
+    assign_cos) assignment — the winning cosine half-up rounded at 1e-9
+    (zero-norm rows score 0)."""
+    cent_cos = F.floor(F.col("assign_cos") * 1e9 + F.lit(0.5)) / F.lit(1e9)
+    return assign.select(id_col, "centroid_id", cent_cos.alias("cent_cos"))
 
 
 def _survivor_groups(
@@ -230,7 +219,7 @@ def semdedup_index(
     return {
         "centroids": cents_df,
         "units": uv,
-        "centcos": _cent_cos_rows(emb, assign, cents_df, vec_col, id_col),
+        "centcos": _cent_cos(assign, id_col),
         "labels": labels,
         "params": params,
     }
@@ -306,7 +295,8 @@ def semdedup_upsert(
             "replace vectors, rebuild with semdedup_index."
         )
     assign_new = ivf_assignments(
-        new_emb, index["centroids"], vec_col, id_col, "embedding", "cid"
+        new_emb, index["centroids"], vec_col, id_col, "embedding", "cid",
+        include_score=True,
     )
     uv_new = _unit_rows(new_emb, assign_new, vec_col, id_col)
     if return_candidates:
@@ -325,11 +315,7 @@ def semdedup_upsert(
     )
     new_edges = cross.unionByName(within)
     labels2 = connected_components_incremental(index["labels"], new_edges)
-    centcos2 = index["centcos"].unionByName(
-        _cent_cos_rows(
-            new_emb, assign_new, index["centroids"], vec_col, id_col
-        )
-    )
+    centcos2 = index["centcos"].unionByName(_cent_cos(assign_new, id_col))
     groups = _survivor_groups(centcos2, labels2, id_col)
     survivors = groups.filter(F.col("survivor")).drop("survivor")
     new_index = {

@@ -18,7 +18,7 @@ Index tables:
   ``params``   1-row            — tokenizer version stamp (the postings
                                   are only consistent for one scheme)
 
-Ids must be unique and non-NULL: a NULL id fails the tokenize pass,
+Ids must be unique and non-NULL: a NULL id fails the corpus-stats pass,
 and a duplicated id that matches a query term fails the query (its
 ``dl`` rows would fan out the postings join), each with an error that
 names the id column.
@@ -49,19 +49,27 @@ __all__ = ["bm25_index", "bm25_upsert", "bm25_delete", "bm25_query"]
 
 def _index_parts(df: DataFrame, text_col: str, id_col: str):
     # NULL-id guard: a NULL rid would count toward n_docs and avgdl but
-    # drop out of the rid join, silently losing the document. The
-    # isNotNull filter keeps every row (a NULL rid has raised by then);
-    # it puts on every branch the isnotnull(rid) that bm25_query's rid
-    # join would otherwise infer on the postings branch only, so the
-    # dfreq branch still matches it and reuses the postings exchange.
-    rid = F.when(
-        F.col(id_col).isNull(),
-        F.raise_error(F.lit(f"bm25_index: NULL value in id column {id_col!r}")),
-    ).otherwise(F.col(id_col))
+    # drop out of the rid join, silently losing the document. It raises
+    # from the dl value, which bm25_query's corpus stats sum over every
+    # row; rid itself stays a plain column, so joins and filters on it
+    # see through to the id and shared subplans keep reusing exchanges
+    # (a CASE-wrapped rid cost q209 8 exchanges and 4 broadcasts). The
+    # postings branch filters NULL rids explicitly: that puts the
+    # isnotnull(rid) bm25_query's rid join would otherwise infer on the
+    # postings side only under dfreq too, so dfreq reuses the postings
+    # exchange.
     toks = df.select(
-        rid.alias("rid"), tokens(text_col).alias("__toks")
-    ).filter(F.col("rid").isNotNull())
-    dl = toks.select("rid", F.size("__toks").alias("dl"))
+        F.col(id_col).alias("rid"), tokens(text_col).alias("__toks")
+    )
+    null_id = F.raise_error(
+        F.lit(f"bm25_index: NULL value in id column {id_col!r}")
+    )
+    dl = toks.select(
+        "rid",
+        F.when(F.col("rid").isNull(), null_id)
+        .otherwise(F.size("__toks"))
+        .alias("dl"),
+    )
     # the exploded (rid, term) rows are clustered by rid before the tf
     # count, so bm25_query's per-rid sum over a fresh index runs in the
     # same stage, and dfreq reuses this exchange instead of exploding
@@ -69,7 +77,8 @@ def _index_parts(df: DataFrame, text_col: str, id_col: str):
     # token-array attribute to infer a size() > 0 filter on, so nothing
     # tokenizes below the input's repartition.
     tf = (
-        toks.select(
+        toks.filter(F.col("rid").isNotNull())
+        .select(
             "rid", F.explode(F.transform("__toks", F.lower)).alias("term")
         )
         .repartition("rid")

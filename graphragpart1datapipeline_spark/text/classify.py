@@ -246,7 +246,7 @@ def nb_classify(
 
 # model tables up to this many (bucket, class) literal entries ride in
 # the plan as array literals for the row-local scorer — the PQ-codebook
-# literal bound's pattern (vector/pq.py _LITERAL_BOOK_MAX_DOUBLES)
+# literal bound's pattern (vector/search.py _LITERAL_BOOK_MAX_DOUBLES)
 _LITERAL_MODEL_MAX_ENTRIES = 65536
 
 

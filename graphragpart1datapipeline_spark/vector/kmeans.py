@@ -8,12 +8,14 @@ input, and ``kmeans_fit`` is the engine-native way to produce one.
 
 Design for determinism AND scale:
 
-- **Assignment is row-local**: the k·dim centroid table rides the plan
-  as a LITERAL (the vector/pq.py ``_assign`` pattern; broadcast-join
-  fallback above ~64k doubles), scored with the same in-order-fold
-  ``cosine_expr`` the rest of the vector family uses (argmax = cosine
-  desc, cid asc). No join, no n×k row explosion, no shuffle of
-  anything corpus-sized; ties break identically everywhere.
+- **Assignment is row-local**: the k·dim centroid table is driver
+  state, so every round and the final assignment pass it to the one
+  nearest-centroid kernel (``search._nearest_centroid``), whose literal
+  fork embeds it in the plan (broadcast fork above 64k doubles) and
+  scores it with the same in-order-fold ``cosine_expr`` the rest of the
+  vector family uses (argmin of (−cos, cid): cosine desc, cid asc, NaN
+  last). No join, no n×k row explosion, no shuffle of anything
+  corpus-sized; ties break identically everywhere.
 - **Centroid update is exact integer arithmetic**: components are
   scaled to ``round(v * scale)`` longs, summed (associative +
   commutative → identical under ANY partitioning or engine), and the
@@ -21,7 +23,7 @@ Design for determinism AND scale:
   double averages would drift with partition order; scaled-long sums
   make the WHOLE iterative run reproducible — the DuckDB oracle
   replays every iteration bit-for-bit (q80).
-- Per iteration: ONE map-only corpus scan (row-local argmax fused into
+- Per iteration: ONE map-only corpus scan (row-local argmin fused into
   it) feeding a map-side-combined ``groupBy(cid, dim)`` whose shuffle
   payload is k·dim rows per partition — independent of corpus size.
   Centroids live driver-side (k ≪ n by definition, same contract as
@@ -36,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..util import local_frame
-from .search import ivf_assignments
+from .search import _nearest_centroid
 
 __all__ = ["kmeans_fit", "centroids_df"]
 
@@ -84,8 +86,9 @@ def kmeans_fit(
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
     """Run ``iters`` Lloyd rounds (assign → exact-integer mean) from a
     seeded hash-sample init, then return ``(centroids, assignments)``
-    where ``assignments`` is the (id, centroid_id) frame scored against
-    the FINAL centroids. Empty clusters keep their previous centroid.
+    where ``assignments`` is the (id, centroid_id, assign_cos) frame
+    scored against the FINAL centroids (``assign_cos`` is the winning
+    cosine). Empty clusters keep their previous centroid.
 
     The returned centroid list feeds :func:`centroids_df` →
     :func:`ivf_build_index` for a trained IVF index instead of a
@@ -93,106 +96,30 @@ def kmeans_fit(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    spark = df.sparkSession
     corpus = df.select(id_col, vec_col)
     # iterative algorithm scanning the same frame iters+2 times:
     # persist it (MEMORY_AND_DISK, same practice as Spark ML's KMeans —
     # spills instead of failing when the corpus outgrows memory)
     corpus.persist()
     try:
-        return _lloyd(spark, corpus, vec_col, id_col, k, iters, seed, scale)
+        return _lloyd(corpus, vec_col, id_col, k, iters, seed, scale)
     finally:
         corpus.unpersist()
 
 
-def _centroid_argmax_expr(cents, vec_col):
-    """Row-local argmax(cosine desc, cid asc) against a DRIVER-side
-    centroid list embedded as a plan literal (the vector/pq.py
-    ``_assign`` pattern): sort (−cos, cid) structs ascending and take
-    the head — identical ordering semantics to ``max(struct(cos,
-    −cid))`` (negation is order-reversing for doubles under Spark's
-    SQL ordering, ±0.0 and ties included), with the same in-order-fold
-    ``cosine_expr`` per centroid. No join, no n×k row explosion, no
-    shuffle — assignment fuses into the corpus scan."""
-    from .search import cosine_expr
-
-    booklit = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).cast("int").alias("cid"),
-                F.array(*[F.lit(float(x)) for x in vec]).alias("cv"),
-            )
-            for cid, vec in cents
-        ]
-    )
-    scored = F.transform(
-        booklit,
-        lambda c: F.struct(
-            (-cosine_expr(F.col(vec_col), c.getField("cv"))).alias("nc"),
-            c.getField("cid").alias("cid"),
-        ),
-    )
-    return F.element_at(F.array_sort(scored), 1).getField("cid")
-
-
-# centroid tables up to this many doubles ride in the plan as a
-# literal (same bound as vector/pq.py); larger ones fall back to the
-# broadcast-join + argmax-aggregation shape
-_LITERAL_CENTS_MAX_DOUBLES = 65536
-
-
-def _lloyd(spark, corpus, vec_col, id_col, k, iters, seed, scale):
-    from .search import cosine_expr
-
+def _lloyd(corpus, vec_col, id_col, k, iters, seed, scale):
     cents = _seed_centroids(corpus, vec_col, id_col, k, seed)
     dim = len(cents[0][1]) if cents else 0
     for _ in range(iters):
-        if k * dim <= _LITERAL_CENTS_MAX_DOUBLES:
-            # Round-11 (guide §2.3/§2.4): the centroids are a
-            # driver-side list, so assignment is a row-local literal
-            # argmax — the per-iteration broadcast build, the n×k
-            # scored-row explosion, and the corpus-sized groupBy(id)
-            # shuffle (which carried every VECTOR through the exchange
-            # via first(vec)) all disappear; each Lloyd round is one
-            # map-only scan feeding the k·dim-sized update shuffle.
-            best = corpus.select(
-                _centroid_argmax_expr(cents, vec_col).alias("centroid_id"),
-                F.col(vec_col).alias("__vec"),
-            )
-        else:
-            cdf = centroids_df(spark, cents).select(
-                F.col("cid").alias("__cid"), F.col("embedding").alias("__cv")
-            )
-            scored = corpus.join(F.broadcast(cdf)).select(
-                id_col,
-                vec_col,
-                "__cid",
-                cosine_expr(F.col(vec_col), F.col("__cv")).alias("__cos"),
-            )
-            # argmax(cos desc, cid asc) as ONE aggregation (max of a
-            # (cos, -cid) struct), carrying the vector through — no
-            # window, no join-back; ties break exactly like the
-            # literal path
-            best = (
-                scored.groupBy(id_col)
-                .agg(
-                    F.max(
-                        F.struct(
-                            F.col("__cos").alias("c"),
-                            (-F.col("__cid")).cast("long").alias("nc"),
-                        )
-                    ).alias("b"),
-                    F.first(vec_col).alias("__vec"),
-                )
-                .select(
-                    id_col,
-                    (-F.col("b.nc")).cast("int").alias("centroid_id"),
-                    "__vec",
-                )
-            )
+        # one map-only scan (the literal-fork argmin) feeding the
+        # k·dim-sized update shuffle
+        best = _nearest_centroid(
+            corpus, [(0, cid, vec) for cid, vec in cents], vec_col,
+            [id_col], keep_vec=True,
+        )
         comps = (
             best.select(
-                "centroid_id", F.posexplode(F.col("__vec")).alias("d", "__val")
+                "centroid_id", F.posexplode(F.col(vec_col)).alias("d", "__val")
             )
             .groupBy("centroid_id", "d")
             .agg(
@@ -211,9 +138,7 @@ def _lloyd(spark, corpus, vec_col, id_col, k, iters, seed, scale):
         cents = [
             (cid, by_cid.get(cid, prev)) for cid, prev in cents
         ]
-    final = ivf_assignments(
-        corpus, centroids_df(spark, cents), vec_col=vec_col, id_col=id_col,
-        cent_vec_col="embedding", cent_id_col="cid",
-    )
+    final = _nearest_centroid(
+        corpus, [(0, cid, vec) for cid, vec in cents], vec_col, [id_col]
+    ).withColumnRenamed("score", "assign_cos")
     return cents, final
-

@@ -16,13 +16,15 @@ Spark shape (all three stages):
 
 - **train**: the corpus explodes once into (id, sub, subvec) rows and
   ALL ``m`` subspace Lloyd runs train together — per iteration ONE
-  corpus scan, one (id, sub)-keyed argmin aggregation, and one
-  (sub, cid, dim)-keyed exact-integer centroid update whose shuffle
-  payload is m·ksub·dsub rows per partition, independent of corpus
-  size (the vector/kmeans.py update contract, partitioned by
-  subspace).
-- **encode**: map-only — broadcast the m·ksub codebook, per-row argmin
-  per subspace, no shuffle.
+  corpus scan with a row-local argmin and one (sub, cid, dim)-keyed
+  exact-integer centroid update whose shuffle payload is m·ksub·dsub
+  rows per partition, independent of corpus size (the
+  vector/kmeans.py update contract, partitioned by subspace).
+- **encode**: map-only — per-row argmin per subspace, no shuffle.
+  Training and encoding both assign through the one nearest-centroid
+  kernel (vector/search.py ``_nearest_centroid``, metric ``l2sq``,
+  part = subspace): the driver-held codebook rides in the plan as a
+  literal, and only a codebook above 64k doubles is broadcast.
 - **ADC search**: the query builds an m·ksub distance table
   DRIVER-side (k-sized by definition), broadcast-joins it to the codes
   and decimal-sums m lookups per row — one scan of the CODES (not the
@@ -39,11 +41,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..util import local_frame
-from .search import dot_expr
+from .search import _nearest_centroid, l2sq_expr
 
 __all__ = [
     "pq_train",
@@ -61,17 +63,6 @@ __all__ = [
 ]
 
 
-def l2sq_expr(a: Column, b: Column) -> Column:
-    """Squared L2 distance with a FIXED parenthesization —
-    ``(dot(a,a) - 2·dot(a,b)) + dot(b,b)`` over in-order-fold dots —
-    so Spark, DuckDB, and the driver-side Python all produce the same
-    double. (The elementwise ``Σ(aᵢ-bᵢ)²`` form is a different IEEE op
-    sequence; never mix the two on one code path.)"""
-    return (
-        dot_expr(a, a) - F.lit(2.0) * dot_expr(a, b)
-    ) + dot_expr(b, b)
-
-
 def _l2sq_py(a: Sequence[float], b: Sequence[float]) -> float:
     """Driver-side twin of :func:`l2sq_expr` — same fold order, same
     parenthesization, bit-identical doubles."""
@@ -86,9 +77,10 @@ def _l2sq_py(a: Sequence[float], b: Sequence[float]) -> float:
 
 
 def _subrows(df: DataFrame, vec_col: str, id_col: str, m: int, dsub: int):
-    """(id, sub, __sv) — the vector exploded into its m subvectors
-    (cast to double once, here, so every later stage sees the same
-    values the oracle's CAST sees)."""
+    """(id, sub, vec_col) — the vector exploded into its m subvectors,
+    each under the vector's own column name (cast to double once, here,
+    so every later stage sees the same values the oracle's CAST
+    sees)."""
     v = F.col(vec_col).cast("array<double>")
     return df.select(
         F.col(id_col),
@@ -97,11 +89,11 @@ def _subrows(df: DataFrame, vec_col: str, id_col: str, m: int, dsub: int):
                 F.sequence(F.lit(0), F.lit(m - 1)),
                 lambda s: F.struct(
                     s.cast("int").alias("sub"),
-                    F.slice(v, s * dsub + 1, dsub).alias("__sv"),
+                    F.slice(v, s * dsub + 1, dsub).alias("sv"),
                 ),
             )
         ).alias("__s"),
-    ).select(id_col, "__s.sub", "__s.__sv")
+    ).select(id_col, "__s.sub", F.col("__s.sv").alias(vec_col))
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
@@ -160,126 +152,52 @@ def pq_train(
         seeded = (
             sub.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= ksub)
-            .select("sub", (F.col("__rn") - 1).alias("cid"), "__sv")
+            .select("sub", (F.col("__rn") - 1).alias("cid"), vec_col)
             .collect()
         )
-        book = {(r["sub"], r["cid"]): list(r["__sv"]) for r in seeded}
+        book = {(r["sub"], r["cid"]): list(r[vec_col]) for r in seeded}
         for _ in range(iters):
-            cdf = _book_df(spark, book)
-            assigned = _assign(sub, cdf, id_col)
+            assigned = _nearest_centroid(
+                sub, [(s, c, v) for (s, c), v in book.items()], vec_col,
+                [id_col], "l2sq", part_col="sub", keep_vec=True,
+            )
             upd = (
                 assigned.select(
                     "sub",
-                    "code",
+                    "centroid_id",
                     F.posexplode(
                         F.transform(
-                            F.col("__sv"),
+                            F.col(vec_col),
                             lambda x: F.floor(
                                 x * scale + F.lit(0.5)
                             ).cast("long"),
                         )
                     ).alias("d", "iv"),
                 )
-                .groupBy("sub", "code", "d")
+                .groupBy("sub", "centroid_id", "d")
                 .agg(F.sum("iv").alias("s"), F.count(F.lit(1)).alias("n"))
                 .collect()
             )
             new: dict = {}
             for r in upd:
-                new.setdefault((r["sub"], r["code"]), {})[r["d"]] = (
+                new.setdefault((r["sub"], r["centroid_id"]), {})[r["d"]] = (
                     r["s"] / (r["n"] * scale)
                 )
             for sk, comp in new.items():
                 book[sk] = [comp[i] for i in range(dsub)]
             # keys absent from `new` (empty clusters) keep prior value
-        return _book_df(spark, book, persistable=True)
+        return _book_df(spark, book)
     finally:
         sub.unpersist()
 
 
-def _book_df(spark, book: dict, persistable: bool = False) -> DataFrame:
+def _book_df(spark, book: dict) -> DataFrame:
     rows = [
         (int(s), int(c), [float(x) for x in v])
         for (s, c), v in sorted(book.items())
     ]
-    name = "centroid" if persistable else "__cv"
     return local_frame(
-        spark, rows, f"sub int, cid int, {name} array<double>"
-    )
-
-
-# codebooks up to this many doubles ride in the plan as a literal —
-# the assignment is then ROW-LOCAL (zero shuffle); larger ones fall
-# back to the broadcast-join + argmin-aggregation shape
-_LITERAL_BOOK_MAX_DOUBLES = 65536
-
-
-def _assign(sub: DataFrame, cdf: DataFrame, id_col: str) -> DataFrame:
-    """(id, sub, __sv, code) — argmin squared-L2 per (row, subspace),
-    tie → min cid. The codebook is k-sized serving state by
-    definition, so the default path embeds it as a PLAN LITERAL and
-    computes the argmin as a row-local array fold: NO join, NO
-    corpus-sized shuffle — encode is genuinely map-only, and training
-    iterations shuffle only the m·ksub·dim update rows. A codebook too
-    big for a plan literal (> ~64k doubles) falls back to a broadcast
-    join + one min-struct aggregation (identical arithmetic and
-    tie-break, one corpus-keyed exchange)."""
-    cv = "__cv" if "__cv" in cdf.columns else "centroid"
-    rows = cdf.select("sub", "cid", F.col(cv).alias("cv")).collect()
-    bysub: dict[int, list] = {}
-    for r in rows:
-        bysub.setdefault(int(r["sub"]), []).append(
-            (int(r["cid"]), [float(x) for x in r["cv"]])
-        )
-    m = max(bysub) + 1
-    n_doubles = sum(len(vec) for cs in bysub.values() for _, vec in cs)
-    if n_doubles <= _LITERAL_BOOK_MAX_DOUBLES:
-        booklit = F.array(
-            *[
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(cid).cast("int").alias("cid"),
-                            F.array(
-                                *[F.lit(x) for x in vec]
-                            ).alias("cv"),
-                        )
-                        for cid, vec in sorted(bysub.get(s, []))
-                    ]
-                )
-                for s in range(m)
-            ]
-        )
-        cands = F.element_at(booklit, F.col("sub") + 1)
-        scored = F.transform(
-            cands,
-            lambda c: F.struct(
-                l2sq_expr(F.col("__sv"), c.getField("cv")).alias("__d"),
-                c.getField("cid").alias("cid"),
-            ),
-        )
-        # array_sort on (dist, cid) structs = the argmin with the
-        # exact (dist asc, cid asc) tie-break
-        best = F.element_at(F.array_sort(scored), 1)
-        return sub.select(
-            id_col, "sub", "__sv", best.getField("cid").alias("code")
-        )
-    scored = sub.join(
-        F.broadcast(cdf.select("sub", "cid", F.col(cv).alias("__cv"))),
-        "sub",
-    ).select(
-        id_col,
-        "sub",
-        "__sv",
-        "cid",
-        l2sq_expr(F.col("__sv"), F.col("__cv")).alias("__d"),
-    )
-    best = scored.groupBy(id_col, "sub").agg(
-        F.min(F.struct("__d", "cid")).alias("__b"),
-        F.first("__sv").alias("__sv"),
-    )
-    return best.select(
-        id_col, "sub", "__sv", F.col("__b.cid").alias("code")
+        spark, rows, "sub int, cid int, centroid array<double>"
     )
 
 
@@ -292,16 +210,13 @@ def pq_encode(
     """Quantize the corpus against a trained codebook: (id, sub, code)
     rows — m rows per vector, the compressed serving table (persist it
     partitioned/bucketed by id range; it replaces the float column in
-    the ADC path). Map-only: broadcast codebook, per-row argmin."""
-    cv = "centroid" if "centroid" in codebook.columns else "__cv"
-    shape = codebook.select(
-        F.max("sub").alias("maxsub"),
-        F.min(F.size(cv)).alias("dmin"),
-        F.max(F.size(cv)).alias("dmax"),
-    ).collect()[0]
-    if shape["maxsub"] is None:
+    the ADC path). Map-only: the codebook is collected once and rides
+    in the plan as a literal (per-row argmin, no shuffle)."""
+    book = codebook.select("sub", "cid", "centroid").collect()
+    if not book:
         raise ValueError("pq_encode: empty codebook")
-    nsub = shape["maxsub"] + 1
+    nsub = max(r["sub"] for r in book) + 1
+    dims = [-1 if r["centroid"] is None else len(r["centroid"]) for r in book]
     dim = _vec_dim(df, vec_col)
     if dim % nsub != 0:
         raise ValueError(
@@ -309,18 +224,34 @@ def pq_encode(
             f"m={nsub} subspaces"
         )
     # a wrong-dimension codebook (trained on a different corpus) must
-    # raise, not encode: zip_with pads with NULLs, every distance goes
-    # NULL, and the argmin would pick codes by null-ordering — a
-    # structurally valid but meaningless codes table
-    if shape["dmin"] != dim // nsub or shape["dmax"] != dim // nsub:
+    # raise here, before any Spark job, with the codebook's shape
+    if min(dims) != dim // nsub or max(dims) != dim // nsub:
         raise ValueError(
-            f"pq_encode: codebook centroids have {shape['dmin']}"
-            f"–{shape['dmax']} dims but the corpus subvectors have "
+            f"pq_encode: codebook centroids have {min(dims)}"
+            f"–{max(dims)} dims but the corpus subvectors have "
             f"{dim // nsub} (dim {dim} / m {nsub}) — the codebook was "
             "trained on a different vector dimension"
         )
     sub = _subrows(df, vec_col, id_col, nsub, dim // nsub)
-    return _assign(sub, codebook, id_col).select(id_col, "sub", "code")
+    return _nearest_centroid(
+        sub, [(r["sub"], r["cid"], r["centroid"]) for r in book], vec_col,
+        [id_col], "l2sq", part_col="sub",
+    ).select(id_col, "sub", F.col("centroid_id").alias("code"))
+
+
+def _query_book(codebook: DataFrame, q: list, fn: str):
+    """The collected codebook rows and their subvector width, checked
+    against a query of ``len(q)`` dims."""
+    book = codebook.collect()
+    if not book:
+        raise ValueError(f"{fn}: empty codebook")
+    dsub = len(book[0]["centroid"])
+    m = max(r["sub"] for r in book) + 1
+    if m * dsub != len(q):
+        raise ValueError(
+            f"{fn}: query dim {len(q)} != codebook m*dsub = {m * dsub}"
+        )
+    return book, dsub
 
 
 def pq_adc_topk(
@@ -342,24 +273,14 @@ def pq_adc_topk(
     clusters (ivf_topk's assignment filter) for IVF-PQ serving."""
     if k < 1:
         raise ValueError(f"pq_adc_topk: k must be >= 1, got {k}")
-    book = codebook.collect()
-    if not book:
-        raise ValueError("pq_adc_topk: empty codebook")
-    cv = "centroid" if "centroid" in codebook.columns else "__cv"
-    dsub = len(book[0][cv])
     q = [float(x) for x in query_vec]
-    m = max(r["sub"] for r in book) + 1
-    if m * dsub != len(q):
-        raise ValueError(
-            f"pq_adc_topk: query dim {len(q)} != codebook m*dsub "
-            f"= {m * dsub}"
-        )
+    book, dsub = _query_book(codebook, q, "pq_adc_topk")
     dtable = local_frame(
         codes.sparkSession, [
             (
                 int(r["sub"]),
                 int(r["cid"]),
-                _l2sq_py(q[r["sub"] * dsub : (r["sub"] + 1) * dsub], r[cv]),
+                _l2sq_py(q[r["sub"] * dsub : (r["sub"] + 1) * dsub], r["centroid"]),
             )
             for r in book
         ],
@@ -641,17 +562,7 @@ def ivfpq_residual_topk(
     probed = [
         (pid, byid[pid]) for pid in coarse_probe_ids(cents, q, nprobe)
     ]
-    book = codebook.collect()
-    if not book:
-        raise ValueError("ivfpq_residual_topk: empty codebook")
-    cv = "centroid" if "centroid" in codebook.columns else "__cv"
-    dsub = len(book[0][cv])
-    m = max(r["sub"] for r in book) + 1
-    if m * dsub != len(q):
-        raise ValueError(
-            f"ivfpq_residual_topk: query dim {len(q)} != codebook "
-            f"m*dsub = {m * dsub}"
-        )
+    book, dsub = _query_book(codebook, q, "ivfpq_residual_topk")
     spark = codes.sparkSession
     rows = []
     for pcid, pvec in probed:
@@ -663,7 +574,7 @@ def ivfpq_residual_topk(
                     int(pcid),
                     s,
                     int(r["cid"]),
-                    _l2sq_py(qres[s * dsub : (s + 1) * dsub], r[cv]),
+                    _l2sq_py(qres[s * dsub : (s + 1) * dsub], r["centroid"]),
                 )
             )
     dtable = local_frame(

@@ -12,6 +12,11 @@ Engine design:
   query's bucket (+ optional multi-probe neighbors). At 100 TB the
   bucket column is a partition/bucketing key so a probe touches a
   single partition instead of the full corpus.
+- ``_nearest_centroid`` — THE nearest-centroid kernel: k-means
+  (vector/kmeans.py), the IVF assignment, PQ training and encoding
+  (vector/pq.py) and SemDeDup (dedup/semantic.py) all assign vectors
+  to centroids through it, with one literal fork and one broadcast
+  fork that rank (score, cid) identically, NaN last.
 - Embeddings are plain ``array<float>`` columns; no UDF in the hot path.
 """
 
@@ -58,6 +63,130 @@ def l2_norm_expr(a: Column) -> Column:
 def cosine_expr(a: Column, b: Column) -> Column:
     denom = l2_norm_expr(a) * l2_norm_expr(b)
     return F.when(denom > 0, dot_expr(a, b) / denom).otherwise(F.lit(0.0))
+
+
+def l2sq_expr(a: Column, b: Column) -> Column:
+    """Squared L2 distance with a FIXED parenthesization —
+    ``(dot(a,a) - 2·dot(a,b)) + dot(b,b)`` over in-order-fold dots —
+    so Spark, DuckDB, and the driver-side Python all produce the same
+    double. (The elementwise ``Σ(aᵢ-bᵢ)²`` form is a different IEEE op
+    sequence; never mix the two on one code path.)"""
+    return (
+        dot_expr(a, a) - F.lit(2.0) * dot_expr(a, b)
+    ) + dot_expr(b, b)
+
+
+# a driver-held centroid book up to this many doubles rides in the plan
+# as a literal; a larger one, or a DataFrame book, is broadcast
+_LITERAL_BOOK_MAX_DOUBLES = 65536
+
+
+def _book_literal(book, cid_type: str) -> Column:
+    """A driver-held ``(part, cid, vector)`` book as ONE plan literal:
+    array indexed by part of array<struct<cid, cv array<double>>>."""
+
+    def entry(cid, vec) -> Column:
+        cv = F.array(*[F.lit(float(x)) for x in vec])
+        return F.struct(F.lit(cid).cast(cid_type).alias("cid"), cv.alias("cv"))
+
+    book = sorted(book)
+    return F.array(
+        *[
+            F.array(*[entry(c, vec) for p, c, vec in book if p == part])
+            for part in range(book[-1][0] + 1)
+        ]
+    )
+
+
+def _nearest_centroid(
+    df: DataFrame,
+    book,
+    vec_col: str,
+    key: Sequence[str],
+    metric: str = "cos",
+    part_col: str | None = None,
+    keep_vec: bool = False,
+    cid_type: str = "int",
+) -> DataFrame:
+    """Assign every row of ``df`` to its nearest centroid: returns
+    ``key`` (+ ``part_col``), ``centroid_id``, the winning ``score``
+    (+ ``vec_col`` when ``keep_vec``).
+
+    ``book`` is a driver-side list of ``(part, cid, vector)`` or a
+    DataFrame (``part``, ``cid``, ``cv``); with ``part_col`` a row only
+    meets the centroids of its own part (PQ's subspaces), without it
+    every centroid (``part`` ignored). ``metric``: ``"cos"`` scores
+    ``cosine_expr`` and ranks on −cos; ``"l2sq"`` scores and ranks on
+    ``l2sq_expr``. Both forks take the minimum of the (rank key, cid)
+    struct, so NaN ranks last (Spark orders NaN above +inf), −0.0 ties
+    +0.0 and ties go to the lowest cid — identical by construction.
+
+    The form of the book picks the fork. A driver-held book of at most
+    ``_LITERAL_BOOK_MAX_DOUBLES`` doubles rides in the plan as a literal
+    and the argmin is a row-local ``array_min``: no join, no exchange
+    (``cid_type`` types its ids). A DataFrame book, or a larger one, is
+    broadcast and the argmin is ONE ``min(struct)`` aggregation keyed
+    on ``key`` (+ part), whose map-side partial aggregate ships only
+    the key and the struct (+ the vector for ``keep_vec``) through the
+    exchange; ``key`` must identify a row there. A row vector whose
+    length differs from a centroid's raises in both forks."""
+    v = F.col(vec_col)
+    group = [*key, *([part_col] if part_col else [])]
+
+    def ranked(cid: Column, cv: Column) -> Column:
+        s = l2sq_expr(v, cv) if metric == "l2sq" else -cosine_expr(v, cv)
+        ragged = v.isNotNull() & cv.isNotNull() & (F.size(v) != F.size(cv))
+        msg = F.format_string(
+            f"nearest centroid: vector in column {vec_col!r} has %d dims "
+            "but the centroid book has %d", F.size(v), F.size(cv),
+        )
+        return F.struct(
+            F.when(ragged, F.raise_error(msg)).otherwise(s).alias("s"),
+            cid.alias("cid"),
+        )
+
+    vec_out = [v] if keep_vec else []
+    if not isinstance(book, DataFrame):
+        book = [(int(p) if part_col else 0, c, vec) for p, c, vec in book]
+        if book and (
+            sum(len(vec) for _, _, vec in book) <= _LITERAL_BOOK_MAX_DOUBLES
+        ):
+            part = F.col(part_col) if part_col else F.lit(0)
+            cands = F.element_at(_book_literal(book, cid_type), part + 1)
+            best = F.array_min(
+                F.transform(cands, lambda c: ranked(c["cid"], c["cv"]))
+            )
+            out = df.select(*group, best.alias("__b"), *vec_out)
+        else:
+            book = local_frame(
+                df.sparkSession,
+                [(p, c, [float(x) for x in vec]) for p, c, vec in book],
+                f"part int, cid {cid_type}, cv array<double>",
+            )
+    if isinstance(book, DataFrame):
+        cols = (["part"] if part_col else []) + ["cid", "cv"]
+        b = book.select(*[F.col(c).alias("__" + c) for c in cols])
+        cond = F.col(part_col) == F.col("__part") if part_col else None
+        scored = (
+            df.select(*group, v)
+            .join(F.broadcast(b), cond)
+            .select(
+                *group,
+                ranked(F.col("__cid"), F.col("__cv")).alias("__sc"),
+                *vec_out,
+            )
+        )
+        out = scored.groupBy(*group).agg(
+            F.min("__sc").alias("__b"),
+            *([F.first(vec_col).alias(vec_col)] if keep_vec else []),
+        )
+    score = F.col("__b.s")
+    return out.select(
+        *group,
+        F.col("__b.cid").alias("centroid_id"),
+        (score if metric == "l2sq" else -score).alias("score"),
+        *([vec_col] if keep_vec else []),
+    )
 
 
 def _query_lit(query_vec: Sequence[float]) -> Column:
@@ -252,58 +381,32 @@ def ivf_assignments(
     include_score: bool = False,
 ) -> DataFrame:
     """IVF index build: assign every vector to its max-cosine centroid
-    (ties → lowest centroid id). The centroid table is small by
-    definition (k ≪ n) so it broadcasts; the argmax is ONE max-struct
-    aggregation with map-side partial aggregation — the n×k scored
-    rows collapse to n per map partition before the exchange (round 11,
-    guide §2.3 "aggregate before you shuffle"; the old shape was a
-    window ``row_number`` that SORTED all n×k scored rows through a
-    corpus-wide exchange with no partial aggregation). Arithmetic and
-    the (cos desc, cid asc) tie-break are bit-identical to the window
-    (max of a (cos, −cid) struct; negation is order-reversing for
-    doubles under Spark's SQL ordering, ±0.0 and ties included).
-
-    A fully shuffle-free literal-argmax variant (the vector/pq.py
-    ``_assign`` pattern) was measured at sf0.1 and REJECTED for this
-    API: eagerly collecting the centroid frame adds a driver job per
-    call, which costs more at bench scale than the exchange it removes
-    (q42/q185/q211/q180 each pay 1-4 calls per run); callers that
-    already hold driver-side centroids (kmeans' Lloyd loop) use the
-    literal form directly. At 100 TB the (id, centroid_id) output is
+    (ties → lowest centroid id, NaN cosines last) through
+    :func:`_nearest_centroid`'s broadcast fork — the centroid table is
+    small by definition (k ≪ n) so it broadcasts, and the argmin is ONE
+    min-struct aggregation whose map-side partial aggregate collapses
+    the n×k scored rows to n per partition before the exchange. Callers
+    that already hold driver-side centroids (k-means, ``ivf_topk``'s
+    inline path) pass them to the kernel's literal fork instead: no
+    join, no exchange. At 100 TB the (id, centroid_id) output is
     persisted and the corpus is repartitioned/bucketed BY centroid_id
-    so a probe reads only its clusters. Returns (id_col, centroid_id).
+    so a probe reads only its clusters. Returns (id_col, centroid_id),
+    plus ``assign_cos`` (the winning cosine) with ``include_score``.
 
-    The centroid id must be an integral type: the (−cid) tie-break key
-    would turn any other id (a string, say) into a NULL centroid_id, so
-    such a frame raises TypeError instead."""
-    v = df.select(F.col(id_col), F.col(vec_col).alias("__v"))
-    c = centroids.select(
-        F.col(cent_id_col).alias("__cid"), F.col(cent_vec_col).alias("__cv")
+    The centroid id must be an integral type: it names the cluster the
+    persisted index is partitioned by, so any other type (a string,
+    say) raises TypeError."""
+    book = centroids.select(
+        F.col(cent_id_col).alias("cid"), F.col(cent_vec_col).alias("cv")
     )
-    cid_dtype = c.schema["__cid"].dataType
+    cid_dtype = book.schema["cid"].dataType
     if not isinstance(cid_dtype, IntegralType):
         raise TypeError(
             f"ivf_assignments: centroid id column {cent_id_col!r} must be "
             f"an integral type, got {cid_dtype.simpleString()}"
         )
-    cid_type = cid_dtype.simpleString()
-    scored = v.join(F.broadcast(c)).select(
-        id_col,
-        "__cid",
-        cosine_expr(F.col("__v"), F.col("__cv")).alias("__cos"),
-    )
-    best = scored.groupBy(id_col).agg(
-        F.max(
-            F.struct(
-                F.col("__cos").alias("c"),
-                (-F.col("__cid")).cast("long").alias("nc"),
-            )
-        ).alias("__b")
-    )
-    out = best.select(
-        id_col,
-        (-F.col("__b.nc")).cast(cid_type).alias("centroid_id"),
-        F.col("__b.c").alias("assign_cos"),
+    out = _nearest_centroid(df, book, vec_col, [id_col]).withColumnRenamed(
+        "score", "assign_cos"
     )
     if include_score:
         # assignment QUALITY (winning cosine) — what ivf_upsert's
@@ -651,15 +754,18 @@ def ivf_topk(
     When given, the probe reads ONLY the index — no full-corpus
     assignment recompute per query; with the index partitioned by
     centroid_id the filter prunes to the probed clusters at scan time.
-    When omitted, assignments are computed inline (one corpus scan) —
-    fine for one-off queries, wrong for a query loop."""
+    When omitted, assignments are computed inline against the centroid
+    rows already collected for the probe (the kernel's literal fork:
+    one map-only corpus scan) — fine for one-off queries, wrong for a
+    query loop."""
     cents = centroids.select(cent_id_col, cent_vec_col).collect()
     probe_ids = coarse_probe_ids(cents, query_vec, nprobe)
-    assign = (
-        assignments
-        if assignments is not None
-        else ivf_assignments(df, centroids, vec_col, id_col, cent_vec_col, cent_id_col)
-    )
+    assign = assignments
+    if assign is None:
+        assign = _nearest_centroid(
+            df, [(0, cid, vec) for cid, vec in cents], vec_col, [id_col],
+            cid_type=dict(centroids.dtypes)[cent_id_col],
+        ).select(id_col, "centroid_id")
     cand = df.join(
         assign.filter(F.col("centroid_id").isin(probe_ids)), id_col
     )

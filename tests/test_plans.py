@@ -242,18 +242,47 @@ def test_global_shuffle_shards_single_exchange(spark):
     assert "CartesianProduct" not in p
 
 
-def test_kmeans_assignment_broadcasts_centroids(spark):
+def _exchange_inputs(formatted: str) -> list[str]:
+    """The ``Input [...]`` line of every shuffle ``Exchange`` node in an
+    ``explain("formatted")`` plan (broadcast exchanges excluded)."""
+    import re
+
+    return re.findall(r"\(\d+\) Exchange\s*\nInput \[\d+\]: (\[.*\])", formatted)
+
+
+def test_kmeans_assignment_is_join_and_exchange_free(spark):
     from graphragpart1datapipeline_spark.sources.io import read_table
     from graphragpart1datapipeline_spark.vector.kmeans import kmeans_fit
 
     emb = read_table(spark, SF, "embeddings")
     _, assign = kmeans_fit(emb, k=4, iters=1, seed=42)
     p = _plan(assign)
-    # the k-row centroid table broadcasts; the corpus vectors are never
-    # shuffled by a join key and never cross-joined pairwise
+    # the driver-held centroids ride in the plan as a literal: the
+    # assignment is a row-local argmin over the corpus scan — no join
+    # of any kind, and no exchange, so no corpus vector is shuffled
+    assert "Join" not in p and "CartesianProduct" not in p
+    assert "Exchange" not in p
+    assert "Scan parquet" in p
+
+
+def test_ivf_assignment_exchange_carries_no_vectors(spark):
+    from graphragpart1datapipeline_spark.sources.io import read_table
+    from graphragpart1datapipeline_spark.vector.search import ivf_assignments
+
+    emb = read_table(spark, SF, "embeddings")
+    cents = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cid"), F.col("embedding")
+    )
+    p = _formatted(ivf_assignments(emb, cents, include_score=True))
+    # a DataFrame centroid book takes the broadcast fork: the centroids
+    # broadcast, and the one shuffle (the argmin's) carries only the
+    # row key and the partially aggregated (score, cid) struct
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-    assert "CartesianProduct" not in p
+    assert "SortMergeJoin" not in p and "CartesianProduct" not in p
+    inputs = _exchange_inputs(p)
+    assert len(inputs) == 1, inputs
+    assert "vec_id" in inputs[0] and inputs[0].count("#") == 2
+    assert "embedding" not in inputs[0]
 
 
 def test_incremental_near_dup_no_corpus_self_pairing(spark):

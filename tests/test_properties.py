@@ -1356,3 +1356,119 @@ def test_contamination_frac_bounds_and_monotone(spark, docs):
     for d in r_small:
         assert 0.0 <= r_small[d] <= 1.0
         assert r_big[d] >= r_small[d]
+
+
+_comp = st.one_of(
+    st.sampled_from([0.0, -0.0, 1.0, -1.0, 0.5, 2.0]),
+    st.sampled_from([float("nan"), float("inf"), float("-inf")]),
+)
+
+
+@st.composite
+def centroid_cases(draw):
+    """(book, rows, n_parts): a small ``(part, cid, vector)`` book — every
+    part non-empty, cids distinct within a part, vectors drawn from a
+    tiny pool so exact ties and zero-norm centroids are common — and
+    unique-id rows ``(id, part, vector | None)`` over the book's
+    parts."""
+    dim = draw(st.integers(1, 3))
+    vec = st.lists(_comp, min_size=dim, max_size=dim)
+    n_parts = draw(st.integers(1, 2))
+    book = []
+    for p in range(n_parts):
+        cids = draw(st.lists(st.integers(0, 9), min_size=1, max_size=4, unique=True))
+        book += [(p, c, draw(vec)) for c in cids]
+    rows = draw(
+        st.lists(
+            st.tuples(st.integers(0, n_parts - 1), st.one_of(st.none(), vec)),
+            min_size=1,
+            max_size=6,
+        )
+    )
+    return book, [(i, p, v) for i, (p, v) in enumerate(rows)], n_parts
+
+
+@given(
+    case=centroid_cases(),
+    metric=st.sampled_from(["cos", "l2sq"]),
+    with_part=st.booleans(),
+    ragged=st.booleans(),
+)
+@SETTINGS
+def test_nearest_centroid_forks_agree(spark, case, metric, with_part, ragged):
+    """The literal fork (driver book) and the broadcast fork (DataFrame
+    book) return the same (centroid_id, score) bits per row, NaN
+    included; a finite score always beats NaN; ties go to the lowest
+    cid; a ragged vector raises in both forks."""
+    import math
+    import struct
+
+    import pytest
+
+    from graphragpart1datapipeline_spark.vector.search import (
+        _nearest_centroid,
+        cosine_expr,
+        l2sq_expr,
+    )
+
+    book, rows, n_parts = case
+    if not with_part:
+        rows = [(i, 0, v) for i, _, v in rows]
+    part_col = "part" if with_part else None
+    df = spark.createDataFrame(rows, "id int, part int, v array<double>")
+    bdf = spark.createDataFrame(book, "part int, cid int, cv array<double>")
+
+    def bits(x):
+        # every NaN is one value to Spark's ordering; sign of zero counts
+        if x is None or math.isnan(x):
+            return x if x is None else "nan"
+        return struct.pack(">d", x)
+
+    def run(b, data=df):
+        return {
+            (r["id"], r["part"] if with_part else 0): (
+                r["centroid_id"], bits(r["score"])
+            )
+            for r in _nearest_centroid(
+                data, b, "v", ["id"], metric, part_col=part_col
+            ).collect()
+        }
+
+    if ragged:
+        # one row longer than the book's vectors fails both forks,
+        # naming the vector column
+        dims = {len(v) for _, _, v in book}
+        bad = df.union(
+            spark.createDataFrame(
+                [(len(rows), 0, [0.5] * (max(dims) + 1))], df.schema
+            )
+        )
+        for b in (book, bdf):
+            with pytest.raises(Exception, match="column 'v' has"):
+                run(b, bad)
+        return
+
+    lit, brd = run(book), run(bdf)
+    assert lit == brd
+    assert len(lit) == len(rows)
+
+    # the winner is the min of (rank key, cid) over the row's candidates
+    # with NaN after every number (NULL scores sort first)
+    rank = l2sq_expr if metric == "l2sq" else (lambda a, b: -cosine_expr(a, b))
+    cond = (F.col("part") == F.col("bp")) if with_part else F.lit(True)
+    pairs = (
+        df.join(bdf.withColumnRenamed("part", "bp"), cond)
+        .select("id", "part", "cid", rank(F.col("v"), F.col("cv")).alias("s"))
+        .collect()
+    )
+    cands: dict = {}
+    for r in pairs:
+        key = (r["id"], r["part"] if with_part else 0)
+        s = r["s"]
+        order = (0, 0.0) if s is None else (2, 0.0) if math.isnan(s) else (1, s)
+        cands.setdefault(key, []).append((order, r["cid"]))
+    for key, cs in cands.items():
+        (best_order, best_cid) = min(cs)
+        assert lit[key][0] == best_cid
+        if any(o[0] == 1 for o, _ in cs):
+            assert lit[key][1] != "nan"

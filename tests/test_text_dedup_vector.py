@@ -301,6 +301,55 @@ def test_ivf_assignments_rejects_non_integral_centroid_id(spark):
         ivf_assignments(df, cents)
 
 
+def test_ivf_assignments_ranks_nan_centroid_last(spark):
+    """A NaN cosine must lose to every real one, as in k-means' literal
+    path. Spark orders NaN above +inf, so an argmax on cosine would send
+    every row to the NaN centroid."""
+    import math
+
+    from graphragpart1datapipeline_spark.vector.search import ivf_assignments
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.5]), (1, [0.0, 1.0]), (2, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [nan, 1.0]), (2, [0.0, -0.0])],
+        "cid int, embedding array<double>",
+    )
+    got = {
+        r["vec_id"]: (r["centroid_id"], r["assign_cos"])
+        for r in ivf_assignments(df, cents, include_score=True).collect()
+    }
+    assert {i: c for i, (c, _) in got.items()} == {0: 0, 1: 0, 2: 0}
+    assert got[0][1] == 1.0 / math.sqrt(1.25)
+    assert not any(math.isnan(s) for _, s in got.values())
+
+
+def test_ivf_assignments_ragged_vector_raises(spark):
+    """A 3-dim row against 2-dim centroids used to score NULL silently."""
+    import pytest
+
+    from graphragpart1datapipeline_spark.vector.search import (
+        ivf_assignments,
+        ivf_topk,
+    )
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cid int, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="column 'embedding' has 3 dims"):
+        ivf_assignments(df, cents).collect()
+    # the inline ivf_topk assignment takes the literal fork
+    with pytest.raises(Exception, match="column 'embedding' has 3 dims"):
+        ivf_topk(df, [1.0, 0.0], cents, k=2).collect()
+
+
 def test_ivf_prebuilt_index_probe(spark, tmp_path):
     from graphragpart1datapipeline_spark.vector.search import (
         ivf_build_index,
